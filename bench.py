@@ -34,10 +34,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 # already pinned it)
 os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
-from welearn_datastack_spark.operators.dedup import (
-    PairVolumeExceeded,
-    release_guard_caches,
-)
+from welearn_datastack_spark.operators.dedup import PairVolumeExceeded
 from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
 from welearn_datastack_spark.session import get_spark
 
@@ -203,11 +200,12 @@ def _storage_info(spark) -> dict[str, int] | None:
 
 def post_query_hygiene(spark) -> dict[str, int] | None:
     """Cache hygiene between bench queries (round-14 verdict item 1):
-    sample what the query just left in the block manager, and if it
-    left ANYTHING, release the session-lifetime guard persists and
-    clear the catalog cache so the NEXT query starts from a clean
-    JVM. Returns the pre-clear storage record (None/zeroes = the query
-    was already clean, nothing was cleared).
+    sample what the query just left in the block manager, then clear
+    the catalog cache (which also unpersists the session-lifetime
+    guard persists) so the NEXT query starts from a clean JVM, and
+    drop orphaned persisted RDDs if any blocks were left. Returns the
+    pre-clear storage record (None/zeroes = the query was already
+    clean).
 
     Rationale: only the persist_on_probe dedup queries deliberately
     cache across their own sink (2 of 91 headline queries); their
@@ -215,19 +213,16 @@ def post_query_hygiene(spark) -> dict[str, int] | None:
     while the memory pressure and GC their lingering blocks impose on
     every LATER query in the pass is exactly the flap the per-round
     adjudications kept acquitting as 'session-state'. Clean state per
-    query makes every wall self-contained; the probe-verdict memo
-    (Python-side) still makes warm-pass guard probes free.
-    SPARK_GRAFT_BENCH_CACHE_CLEAN=0 restores the legacy leave-dirty
-    behavior (A/B evidence)."""
+    query makes every wall self-contained; a warm pass therefore pays
+    each guarded query's probe again, as every single-shot run does."""
     rec = _storage_info(spark)
     # clear UNCONDITIONALLY, not only when blocks materialized: a query
     # that registers a persist but errors/short-circuits before any
     # block lands reads rdds==0 here, yet its lazy CacheManager entry
     # would materialize inside a LATER query sharing the plan fragment
     # — the exact cross-query attribution flap this hook exists to
-    # prevent (round-15 self-review). On a clean session these calls
-    # are a few no-op py4j round-trips outside the timed window.
-    release_guard_caches()
+    # prevent (round-15 self-review). On a clean session this is a
+    # no-op py4j round-trip outside the timed window.
     try:
         spark.catalog.clearCache()
     except Exception:  # noqa: BLE001
@@ -449,7 +444,6 @@ def main() -> None:
     # into Janino recompiles; get_spark() raises
     # spark.sql.codegen.cache.maxEntries to 4096 for exactly this.
     shuffle_order = os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "1") != "0"
-    cache_clean = os.environ.get("SPARK_GRAFT_BENCH_CACHE_CLEAN", "1") != "0"
     warm_by_query: dict[str, list[float]] = {}
     storage_by_query: dict[str, dict[str, int]] = {}
     positions: dict[str, list[int]] = {}
@@ -512,7 +506,6 @@ def main() -> None:
             "queries_rel_spread": p_spread,
             "queries_position": positions,
             "queries_shuffle": bytes_by_query,
-            "cache_clean": cache_clean,
             "queries_storage": storage_by_query,
             "shuffle_read_mb": rd,
             "shuffle_write_mb": wr,
@@ -571,15 +564,14 @@ def main() -> None:
                 # then clear it so the next query's wall is self-
                 # contained — a dirty-state stamp is now DETECTABLE
                 # (queries_storage nonzero) and IMPOSSIBLE (cleared)
-                if cache_clean:
-                    st = post_query_hygiene(spark)
-                    if st and st["rdds"]:
-                        prev = storage_by_query.get(name)
-                        if prev is None or (
-                            st["mem_bytes"] + st["disk_bytes"]
-                            > prev["mem_bytes"] + prev["disk_bytes"]
-                        ):
-                            storage_by_query[name] = st
+                st = post_query_hygiene(spark)
+                if st and st["rdds"]:
+                    prev = storage_by_query.get(name)
+                    if prev is None or (
+                        st["mem_bytes"] + st["disk_bytes"]
+                        > prev["mem_bytes"] + prev["disk_bytes"]
+                    ):
+                        storage_by_query[name] = st
                 # compact per-query stdout line: with console progress
                 # bars off (session.py), these are what the driver's
                 # ~2000-char tail shows — query names + times instead
@@ -588,14 +580,12 @@ def main() -> None:
             except PairVolumeExceeded as e:
                 guard_exits[name] = str(e)[:500]
                 failed.add(name)
-                if cache_clean:
-                    post_query_hygiene(spark)
+                post_query_hygiene(spark)
                 print(f"[p{run_i}] {name} GUARD-EXIT: {e}"[:200], flush=True)
             except Exception as e:  # noqa: BLE001
                 errors[name] = f"{type(e).__name__}: {e}"[:300]
                 failed.add(name)
-                if cache_clean:
-                    post_query_hygiene(spark)
+                post_query_hygiene(spark)
                 # keep any warm samples already collected — a transient
                 # failure on a LATE pass must not erase real timing
                 # signal (the error is recorded alongside, and the

@@ -273,6 +273,46 @@ def test_stream_ingest_probe_exactly_once(spark, sf_dir, tmp_path):
     assert spark.read.parquet(f"{work}/out").count() == out.count()
 
 
+def test_stream_ingest_probe_empty_batch_leaves_nothing(spark, sf_dir, tmp_path):
+    """A landed 0-row parquet file runs as a micro-batch whose
+    decision directory is written and then deleted through the Hadoop
+    FileSystem: no batch_id=N directory remains, and the state store
+    does not grow."""
+    import glob
+    import os
+    import shutil
+
+    from welearn_datastack_spark.pipeline.ingest_increment import build_state
+    from welearn_datastack_spark.streaming.state_machine import stream_ingest_probe
+
+    docs = load_table(spark, sf_dir, "documents")
+    work = str(tmp_path)
+    state = f"{work}/state"
+    build_state(docs.filter(F.col("doc_id") % 5 == 1), state)
+
+    def state_snapshot():
+        return {
+            part: (
+                spark.read.parquet(f"{state}/{part}").count(),
+                sorted(glob.glob(f"{state}/{part}/*.parquet")),
+            )
+            for part in ("doc_hashes", "band_store")
+        }
+
+    before = state_snapshot()
+    docs.limit(0).coalesce(1).write.parquet(f"{work}/tmp_empty")
+    (part,) = glob.glob(f"{work}/tmp_empty/part-*.parquet")
+    src = f"{work}/incoming"
+    os.makedirs(src)
+    shutil.copy(part, f"{src}/empty.parquet")
+
+    stream_ingest_probe(spark, src, state, f"{work}/ckpt", f"{work}/out")
+    # the batch ran and committed (so its write-then-delete happened)
+    assert os.path.exists(f"{work}/ckpt/commits/0")
+    assert glob.glob(f"{work}/out/batch_id=*") == []
+    assert state_snapshot() == before
+
+
 def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
     """The full maintenance cycle: ingest appends fragments -> compact
     folds them -> fold_state_bucketed rewrites into bucketed tables.

@@ -19,7 +19,9 @@ from pyspark.sql import functions as F
 
 REF_RES = Path("/root/reference/tests/document_collector_hub/resources")
 
-pytestmark = pytest.mark.skipif(
+# the golden-fixture tests need the reference tree; tests on inline
+# payloads run everywhere
+needs_ref = pytest.mark.skipif(
     not REF_RES.exists(), reason="reference fixture tree not present"
 )
 
@@ -33,6 +35,7 @@ def _payload_df(spark, text: str):
 HAL_FIXTURE = REF_RES / "file_plugin_input/JsonHALCollector/hal_test.json"
 
 
+@needs_ref
 def test_hal_extraction_parity(spark):
     from welearn_datastack_spark.extraction.hal import extract_hal
 
@@ -70,6 +73,7 @@ def test_hal_extraction_parity(spark):
         ]
 
 
+@needs_ref
 def test_hal_dead_letters(spark):
     from welearn_datastack_spark.extraction.hal import extract_hal
 
@@ -97,6 +101,7 @@ def test_hal_dead_letters(spark):
     assert out["hal-3"].startswith("NoContent")
 
 
+@needs_ref
 def test_hal_pdf_mode_with_prefetched_text(spark):
     from welearn_datastack_spark.extraction.hal import extract_hal
 
@@ -213,6 +218,7 @@ def _oa_expected(work: dict) -> dict:
     }
 
 
+@needs_ref
 def test_open_alex_extraction_parity(spark):
     from welearn_datastack_spark.extraction.open_alex import extract_open_alex
 
@@ -251,6 +257,7 @@ def test_open_alex_extraction_parity(spark):
     assert checked_ok >= 50
 
 
+@needs_ref
 def test_open_alex_gates(spark):
     from welearn_datastack_spark.extraction.open_alex import extract_open_alex
     from welearn_datastack_spark.extraction.constants import (
@@ -306,6 +313,7 @@ def test_open_alex_gates(spark):
 TED_FIXTURE = REF_RES / "file_plugin_input/ted_page.json"
 
 
+@needs_ref
 def test_ted_extraction_parity(spark):
     from welearn_datastack_spark.extraction.ted import extract_ted
 
@@ -345,6 +353,7 @@ def test_ted_extraction_parity(spark):
     assert d["readability"] is not None
 
 
+@needs_ref
 def test_ted_no_content_dead_letter(spark):
     from welearn_datastack_spark.extraction.ted import extract_ted
 
@@ -355,12 +364,69 @@ def test_ted_no_content_dead_letter(spark):
     assert row["title"] is None
 
 
+def test_ted_details_fields_subset_and_typo(spark):
+    """details_fields computes the requested fields exactly as the
+    default path does, types the rest as NULL under an identical
+    schema, and rejects a misspelled field instead of NULLing it."""
+    from welearn_datastack_spark.extraction.ted import extract_ted
+
+    raw = json.dumps(
+        {
+            "data": {
+                "video": {
+                    "description": "A talk.",
+                    "internalLanguageCode": "en",
+                    "presenterDisplayName": "Speaker",
+                    "duration": 613,
+                    "title": "T",
+                    "publishedAt": "2017-08-10T14:37:43Z",
+                    "canonicalUrl": "https://www.ted.com/talks/t1",
+                    "type": {"name": "TEDx Talk"},
+                },
+                "translation": {
+                    "paragraphs": [
+                        {
+                            "cues": [
+                                {"text": "Every talk starts somewhere."},
+                                {"text": "(Applause)"},
+                                {"text": "This one starts here, with a story."},
+                            ]
+                        }
+                    ]
+                },
+            }
+        }
+    )
+    wanted = ("duration", "publication_date")
+    full = extract_ted(_payload_df(spark, raw))
+    sub = extract_ted(_payload_df(spark, raw), details_fields=wanted)
+    assert sub.schema == full.schema
+
+    (f,), (s,) = full.collect(), sub.collect()
+    fd = f["details"].asDict(recursive=True)
+    sd = s["details"].asDict(recursive=True)
+    for name in fd:
+        if name in wanted:
+            assert sd[name] == fd[name] and fd[name] is not None, name
+        else:
+            assert sd[name] is None and fd[name] is not None, name
+    assert {k: v for k, v in f.asDict().items() if k != "details"} == {
+        k: v for k, v in s.asDict().items() if k != "details"
+    }
+
+    with pytest.raises(ValueError, match="publication_dat'"):
+        extract_ted(
+            _payload_df(spark, raw), details_fields=("duration", "publication_dat")
+        )
+
+
 # --------------------------------------------------------------- PLOS
 
 PLOS_XML = REF_RES / "file_plugin_input/page_plos1.xml"
 PLOS_DETAILS = REF_RES / "file_plugin_input/details_plos.json"
 
 
+@needs_ref
 def test_plos_extraction_parity(spark):
     """Mirror of the reference's test_scraping_plos.py:46-98 — details
     compared field-by-field against the reference's own expected-output
@@ -398,6 +464,7 @@ def test_plos_extraction_parity(spark):
     assert "\n" not in row["full_content"]
 
 
+@needs_ref
 def test_plos_invalid_xml_dead_letter(spark):
     from welearn_datastack_spark.extraction.plos import extract_plos
 
@@ -409,6 +476,7 @@ def test_plos_invalid_xml_dead_letter(spark):
     assert "No article meta" in row["error_info"]
 
 
+@needs_ref
 def test_plos_api_url():
     from welearn_datastack_spark.extraction.plos import plos_api_url
 
@@ -422,6 +490,7 @@ def test_plos_api_url():
 # ---------------------------------------------------------- Wikipedia
 
 
+@needs_ref
 def test_wikipedia_sections_flatten(spark):
     from welearn_datastack_spark.extraction.wikipedia import extract_wikipedia
 
@@ -452,6 +521,7 @@ def test_wikipedia_sections_flatten(spark):
     assert row["full_content"] == "Summary text. History H text Early E text"
 
 
+@needs_ref
 def test_wikipedia_redirect_dead_letter(spark):
     from welearn_datastack_spark.extraction.wikipedia import extract_wikipedia
 
@@ -468,6 +538,7 @@ def test_wikipedia_redirect_dead_letter(spark):
     assert "redirection" in row["error_info"]
 
 
+@needs_ref
 def test_wikipedia_french_blacklist(spark):
     from welearn_datastack_spark.extraction.wikipedia import extract_wikipedia
 
@@ -493,6 +564,7 @@ def test_wikipedia_french_blacklist(spark):
 UVED_FIXTURE = REF_RES / "resource_uved.json"
 
 
+@needs_ref
 def test_uved_extraction_parity(spark):
     """Mirror of the reference's test_uved.py:56-125 over its own
     resource_uved.json fixture."""
@@ -532,6 +604,7 @@ def test_uved_extraction_parity(spark):
     assert d["publication_date"] == exp_ts
 
 
+@needs_ref
 def test_uved_dead_letters(spark):
     from welearn_datastack_spark.extraction.uved import extract_uved
 
@@ -563,6 +636,7 @@ CONV_FIXTURES = [
 ]
 
 
+@needs_ref
 def test_conversation_extraction_parity(spark):
     """Mirror of the reference's test_scraping_conversation.py:56-70:
     both fixture pages extract with non-empty title/description/
@@ -585,6 +659,7 @@ def test_conversation_extraction_parity(spark):
         assert r["publication_date"] is not None
 
 
+@needs_ref
 def test_conversation_missing_title_dead_letter(spark):
     from welearn_datastack_spark.extraction.conversation import extract_conversation
 
@@ -596,6 +671,7 @@ def test_conversation_missing_title_dead_letter(spark):
     assert "Title not found" in r["error_info"]
 
 
+@needs_ref
 def test_conversation_details_fields(spark):
     from welearn_datastack_spark.extraction.conversation import (
         extract_conversation_page,
@@ -619,6 +695,7 @@ def test_conversation_details_fields(spark):
 PEERJ_FIXTURE = REF_RES / "file_plugin_input/page_peerj1.html"
 
 
+@needs_ref
 def test_peerj_extraction_parity(spark):
     """Mirror of the reference's test_scraping_peerj.py:44-67."""
     from welearn_datastack_spark.extraction.peerj import extract_peerj
@@ -645,6 +722,7 @@ def test_peerj_extraction_parity(spark):
     assert "Supplemental Information" not in r["full_content"]
 
 
+@needs_ref
 def test_peerj_unauthorized_license_dead_letter(spark):
     from welearn_datastack_spark.extraction.peerj import extract_peerj
 
@@ -658,6 +736,7 @@ def test_peerj_unauthorized_license_dead_letter(spark):
     assert "UnauthorizedLicense" in r["error_info"]
 
 
+@needs_ref
 def test_peerj_simple_page_url():
     from welearn_datastack_spark.extraction.peerj import peerj_simple_page_url
 
@@ -666,6 +745,7 @@ def test_peerj_simple_page_url():
     assert peerj_simple_page_url("https://peerj.com/articles/1.html") == "https://peerj.com/articles/1.html"
 
 
+@needs_ref
 def test_figure_to_paragraph_table():
     from welearn_datastack_spark.extraction.htmldom import parse_html
     from welearn_datastack_spark.extraction.peerj import figure_to_paragraph
@@ -687,6 +767,7 @@ def test_figure_to_paragraph_table():
 WB_FIXTURE = REF_RES / "file_plugin_input/world_bank_okr_example.xml"
 
 
+@needs_ref
 def test_world_bank_okr_extraction_parity(spark):
     """Mirror of the reference's test_world_bank_okr.py over its own
     OAI METS fixture."""
@@ -722,6 +803,7 @@ def test_world_bank_okr_extraction_parity(spark):
     assert all(t["name"] == t["name"].lower() for t in d["topics"])
 
 
+@needs_ref
 def test_world_bank_license_formats(spark):
     from welearn_datastack_spark.extraction.world_bank_okr import normalize_wb_license
 
@@ -739,6 +821,7 @@ def test_world_bank_license_formats(spark):
     ]
 
 
+@needs_ref
 def test_world_bank_unauthorized_license_dead_letter(spark):
     from welearn_datastack_spark.extraction.world_bank_okr import (
         extract_world_bank_okr,
@@ -755,6 +838,7 @@ def test_world_bank_unauthorized_license_dead_letter(spark):
 UNESDOC_ROOT = REF_RES / "file_plugin_input/root_unesdoc.json"
 
 
+@needs_ref
 def test_unesdoc_extraction_parity(spark):
     """Mirror of the reference's test_unesdoc.py over its own
     explore-API fixture record."""
@@ -781,6 +865,7 @@ def test_unesdoc_extraction_parity(spark):
     assert r["iid"] == "p::usmarcdef_0000397002"
 
 
+@needs_ref
 def test_unesdoc_ark_to_iid(spark):
     from welearn_datastack_spark.extraction.unesdoc import ark_to_iid
 
@@ -792,6 +877,7 @@ def test_unesdoc_ark_to_iid(spark):
     assert got == ["p::usmarcdef_0000389119", "p::usmarcdef_0000389119_fre".replace("389119", "396769"), None]
 
 
+@needs_ref
 def test_unesdoc_description_fallback_and_gates(spark):
     from welearn_datastack_spark.extraction.unesdoc import extract_unesdoc
 
@@ -840,6 +926,7 @@ def test_unesdoc_description_fallback_and_gates(spark):
 OAPEN_FIXTURE = REF_RES / "oapen_api.json"
 
 
+@needs_ref
 def test_oapen_extraction_parity(spark):
     """Mirror of the reference's test_oapen.py over its DSpace item
     fixture."""
@@ -871,6 +958,7 @@ def test_oapen_extraction_parity(spark):
     assert r["description"].startswith("Dans la recherche")
 
 
+@needs_ref
 def test_oapen_unauthorized_license_dead_letter(spark):
     from welearn_datastack_spark.extraction.oapen import extract_oapen
 
@@ -912,6 +1000,7 @@ def _fao_item(**overrides):
     } | overrides
 
 
+@needs_ref
 def test_fao_extraction_parity(spark):
     from welearn_datastack_spark.extraction.fao import extract_fao
 
@@ -937,6 +1026,7 @@ def test_fao_extraction_parity(spark):
     assert d["publication_date"] == exp
 
 
+@needs_ref
 def test_fao_gates(spark):
     from welearn_datastack_spark.extraction.fao import extract_fao
 
@@ -957,6 +1047,7 @@ def test_fao_gates(spark):
     assert "NoDescriptionFound" in out[4]
 
 
+@needs_ref
 def test_fao_sdg_number_quirk():
     from welearn_datastack_spark.extraction.fao import extract_external_sdgs
 
@@ -973,6 +1064,7 @@ PB_CONTENT = REF_RES / "pb_chapters.json"
 PB_METADATA = REF_RES / "pb_chapter_5_metadata.json"
 
 
+@needs_ref
 def test_pressbooks_extraction_parity(spark):
     from welearn_datastack_spark.extraction.pressbooks import extract_pressbooks
 
@@ -1010,6 +1102,7 @@ def test_pressbooks_extraction_parity(spark):
     assert d["partOf"]["element"] == "https://wtcs.pressbooks.pub/communications/"
 
 
+@needs_ref
 def test_pressbooks_url_helpers():
     from welearn_datastack_spark.extraction.pressbooks import (
         book_main_url,
@@ -1023,6 +1116,7 @@ def test_pressbooks_url_helpers():
     assert pressbook_id("https://x.pressbooks.pub/book/", 42) == "https://x.pressbooks.pub/book/?p=42"
 
 
+@needs_ref
 def test_pressbooks_unauthorized_license(spark):
     from welearn_datastack_spark.extraction.pressbooks import extract_pressbooks
 
@@ -1044,6 +1138,7 @@ IRD_FIXTURE = (
 )
 
 
+@needs_ref
 def test_ird_le_mag_extraction_parity(spark):
     """Mirror of the reference's test_irl_le_mag.py:48-96 exact
     expected values."""
@@ -1068,6 +1163,7 @@ def test_ird_le_mag_extraction_parity(spark):
     assert d["license_url"] == "https://lemag.ird.fr/fr/mentions-legales-0"
 
 
+@needs_ref
 def test_ird_le_mag_dead_letters(spark):
     from welearn_datastack_spark.extraction.ird_le_mag import extract_ird_le_mag
 
@@ -1085,6 +1181,7 @@ def test_ird_le_mag_dead_letters(spark):
 # ------------------------------------------------- notre-environnement
 
 
+@needs_ref
 def test_notre_environnement_extraction(spark):
     """Mirror of the reference's test_notre_environnement.py:22-55
     semantics (their HTML is synthetic too; content extraction is
@@ -1118,6 +1215,7 @@ def test_notre_environnement_extraction(spark):
     )
 
 
+@needs_ref
 def test_notre_environnement_no_content_dead_letter(spark):
     from welearn_datastack_spark.extraction.notre_environnement import (
         extract_notre_environnement,
@@ -1135,6 +1233,7 @@ def test_notre_environnement_no_content_dead_letter(spark):
 UNCC_FIXTURE = REF_RES / "unccelearn_course.html"
 
 
+@needs_ref
 def test_unccelearn_extraction_parity(spark):
     from welearn_datastack_spark.extraction.unccelearn import extract_unccelearn
 
@@ -1159,6 +1258,7 @@ def test_unccelearn_extraction_parity(spark):
     assert len(d["keywords"]) > 0
 
 
+@needs_ref
 def test_unccelearn_degraded_mode(spark):
     """No syllabus PDF → description stands in (ref :199-206)."""
     from welearn_datastack_spark.extraction.unccelearn import extract_unccelearn
@@ -1171,6 +1271,7 @@ def test_unccelearn_degraded_mode(spark):
     assert json.loads(r["details_json"])["content_from_pdf"] is False
 
 
+@needs_ref
 def test_unccelearn_duration_formats():
     from welearn_datastack_spark.extraction.unccelearn import (
         convert_duration_to_seconds,
@@ -1188,6 +1289,7 @@ OE_METS = REF_RES / "oe_mets_test.xml"
 OE_CHAPTER_HTML = REF_RES / "oe_book_chapter.html"
 
 
+@needs_ref
 def test_oe_books_book_parity(spark):
     """Mirror of the reference's test_oe_books.py:110-157."""
     from welearn_datastack_spark.extraction.oe_books import extract_oe_books
@@ -1211,6 +1313,7 @@ def test_oe_books_book_parity(spark):
     }
 
 
+@needs_ref
 def test_oe_books_chapter_parity(spark):
     """Mirror of the reference's test_oe_books.py:159-200."""
     from welearn_datastack_spark.extraction.oe_books import extract_oe_books
@@ -1244,6 +1347,7 @@ def test_oe_books_chapter_parity(spark):
     assert r["full_content"] != r["description"]
 
 
+@needs_ref
 def test_oe_books_unknown_type_dead_letter(spark):
     from welearn_datastack_spark.extraction.oe_books import extract_oe_books
 

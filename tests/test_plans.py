@@ -284,9 +284,7 @@ def test_dedup_lsh_exchange_budgets(spark, sf_dir):
     # minhash_lsh_candidates_sampled's persist_on_probe cache live,
     # which legitimately adds 2 exchanges to the hashed sibling's plan
     # — release so the TIGHT budgets keep their teeth (round-13 ADVICE)
-    from welearn_datastack_spark.operators.dedup import release_guard_caches
-
-    release_guard_caches()
+    spark.catalog.clearCache()
     for name, budget in _EXCHANGE_BUDGET.items():
         plan = _plan(spark, sf_dir, name)
         got = plan.count("Exchange hashpartitioning")

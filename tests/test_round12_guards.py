@@ -1,130 +1,15 @@
-"""Round-12 hardening pins: the pre-flight pair-volume disk-budget
-guard (both branches — the round-11 sf100 minhash diagnostic burned 98
-minutes before dying on 'No space left on device'; the guard must make
-that an exit-in-seconds verdict), its probe-skip fast path, and its
-mode/budget resolution."""
+"""Round-12 hardening pins: the adjudicator verdict fixtures, the
+streaming probe's broadcast-to-exchange plan transition, and the
+guarded registry queries' outputs. The pair-volume guard's own verdict
+tests live in test_volume_guard.py."""
 
 from __future__ import annotations
 
-import math
 from pathlib import Path
 
-import pytest
 from pyspark.sql import functions as F
 
-from welearn_datastack_spark.operators.dedup import (
-    PairVolumeExceeded,
-    hexint,
-    pair_volume_guard,
-)
-
 REPO = Path(__file__).resolve().parent.parent
-
-
-def _mega_bucket(spark, n=100):
-    """n members of ONE (band, band_key) bucket → C(n,2) pairs."""
-    return spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.lit(0).alias("band"),
-        F.lit("k").alias("band_key"),
-    )
-
-
-def test_pair_guard_passthrough_under_budget(spark):
-    """Projected volume within budget → the input comes back unchanged
-    (same rows, no sampling filter)."""
-    df = _mega_bucket(spark, n=10)  # 45 pairs * 12 B well under 1 MB
-    out = pair_volume_guard(
-        df, ["band", "band_key"], "doc_id", budget_bytes=1 << 20, mode="fail"
-    )
-    assert out.count() == 10
-
-
-def test_pair_guard_fail_branch_measured_projection(spark):
-    """Over budget in fail mode → PairVolumeExceeded BEFORE any pair
-    row is built, carrying the exact Σ C(c,2) projection."""
-    df = _mega_bucket(spark, n=100)  # C(100,2) = 4950 pairs
-    with pytest.raises(PairVolumeExceeded) as ei:
-        pair_volume_guard(
-            df, ["band", "band_key"], "doc_id",
-            bytes_per_pair=12, budget_bytes=1000, mode="fail",
-        )
-    e = ei.value
-    assert e.projected_pairs == 4950
-    assert e.projected_bytes == 4950 * 12
-    assert e.budget_bytes == 1000
-    # the message IS the verdict the bench artifact records — it must
-    # carry the numbers and the remediation paths
-    assert "4,950" in str(e)
-    assert "sample" in str(e) and "decision-only" in str(e)
-
-
-def test_pair_guard_sample_branch_bounds_mega_bucket(spark):
-    """Over budget in sample mode → deterministic MEMBER sampling at
-    1/ceil(sqrt(den)) — the one construction that bounds a single
-    mega-bucket (bucket-level sampling could not)."""
-    df = _mega_bucket(spark, n=100)
-    budget = 1000
-    out = pair_volume_guard(
-        df, ["band", "band_key"], "doc_id",
-        bytes_per_pair=12, budget_bytes=budget, mode="sample",
-    )
-    den = math.ceil(4950 * 12 / budget)  # 60
-    keep = math.isqrt(den - 1) + 1  # ceil(sqrt(60)) = 8
-    kept = sorted(r["doc_id"] for r in out.collect())
-    # exactly the hexint(id) % keep == 0 members, nothing else
-    expected = [
-        r["doc_id"]
-        for r in df.filter(
-            hexint(F.col("doc_id").cast("string")) % keep == 0
-        ).collect()
-    ]
-    assert kept == sorted(expected)
-    assert 0 < len(kept) < 100
-    # deterministic: same call → same sample
-    out2 = pair_volume_guard(
-        df, ["band", "band_key"], "doc_id",
-        bytes_per_pair=12, budget_bytes=budget, mode="sample",
-    )
-    assert sorted(r["doc_id"] for r in out2.collect()) == kept
-
-
-def test_pair_guard_worst_case_hint_skips_probe_entirely(spark):
-    """When the caller's free upper bound already fits the budget, the
-    guard must not launch ANY Spark job — pinned with a poisoned column
-    whose evaluation would raise."""
-    df = spark.range(4).select(
-        F.col("id").alias("doc_id"),
-        F.lit(0).alias("band"),
-        F.assert_true(F.lit(False)).alias("band_key"),  # evaluating = boom
-    )
-    out = pair_volume_guard(
-        df, ["band", "band_key"], "doc_id",
-        worst_case_pairs=6, bytes_per_pair=12, budget_bytes=1 << 20,
-    )
-    assert out is df  # structurally untouched, no job ran
-
-
-def test_pair_guard_mode_off_and_conf_resolution(spark):
-    """mode='off' skips everything; session conf supplies mode and a
-    size-string budget when the call site passes neither."""
-    df = _mega_bucket(spark, n=100)
-    out = pair_volume_guard(
-        df, ["band", "band_key"], "doc_id", budget_bytes=1, mode="off"
-    )
-    assert out is df
-    spark.conf.set("spark.welearn.pairGuard.mode", "sample")
-    spark.conf.set("spark.welearn.pairGuard.budget", "1k")  # 1024 B
-    try:
-        out = pair_volume_guard(
-            df, ["band", "band_key"], "doc_id", bytes_per_pair=12
-        )
-        assert 0 < out.count() < 100  # sampled, not raised
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
-        spark.conf.unset("spark.welearn.pairGuard.budget")
-    with pytest.raises(ValueError, match="unknown mode"):
-        pair_volume_guard(df, ["band", "band_key"], "doc_id", mode="explode")
 
 
 # --- adjudicator verdict fixtures (round-12 item 5) ------------------
@@ -306,36 +191,3 @@ def test_sampled_candidates_query_engages_and_bounds(spark, sf_dir):
     assert sampled < full, "sampling did not engage (output == full set)"
 
 
-def test_simhash_near_pairs_guarded(spark):
-    """The simhash banded self-join now runs through
-    replicated_volume_guard — the chunk-split cost model (replicated
-    join-input rows, NOT quadratic pairs: simhash pairs are generated
-    in-task and never hit disk). fail branch: a sub-row budget raises
-    with the measured replicated-row projection; no-trigger branch: a
-    generous budget leaves the exact pair set untouched."""
-    import pyspark.sql.functions as F
-
-    from welearn_datastack_spark.operators.dedup import (
-        PairVolumeExceeded,
-        simhash,
-        simhash_near_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta doc {i % 3}") for i in range(40)],
-        ["doc_id", "text"],
-    )
-    fp = simhash(docs, "doc_id", "text", bits=16)
-    spark.conf.set("spark.welearn.pairGuard.budget", "100")
-    try:
-        with pytest.raises(PairVolumeExceeded) as ei:
-            simhash_near_pairs(fp, "doc_id").write.format("noop").mode(
-                "overwrite"
-            ).save()
-        assert ei.value.projected_pairs > 0
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.budget")
-    # generous budget (default: free disk / 2) -> unchanged output
-    out = simhash_near_pairs(fp, "doc_id")
-    assert out.filter(F.col("a_id") >= F.col("b_id")).count() == 0
-    assert out.count() > 0

@@ -1,150 +1,13 @@
-"""Round-13 pins: the volume-guard doctrine generalized to every
-pair-materializing diagnostic (jaccard_pairs quadratic model,
-semantic-dedup chunk-split model), the shared _volume_guard scaffold's
-persist-on-probe semantics, and the two adjudicator verdict branches
+"""Round-13 pins: the two adjudicator verdict branches
 (bytes-grew / no-byte-evidence) that round 12 left to real-data
-happenstance."""
+happenstance, and bench.py's quiet-box gate. The round's volume-guard
+tests live in test_volume_guard.py."""
 
 from __future__ import annotations
 
 from pathlib import Path
 
-import pytest
-from pyspark.sql import functions as F
-
-from welearn_datastack_spark.operators.dedup import (
-    PairVolumeExceeded,
-    jaccard_pairs,
-    replicated_volume_guard,
-    word_shingles,
-)
-
 REPO = Path(__file__).resolve().parent.parent
-
-
-def _docs(spark, n=24, text="alpha beta gamma delta epsilon zeta"):
-    """n documents sharing every trigram shingle — one mega bucket per
-    shingle, ΣC(c,2) = n_shingles · C(n,2)."""
-    return spark.createDataFrame(
-        [(i, text) for i in range(n)], ["doc_id", "text"]
-    )
-
-
-# --- jaccard_pairs guard (round-13 item 1: the last unguarded
-# quadratic — its pair stream IS shuffled by the pair-count groupBy, so
-# the quadratic Σ C(c,2) model applies) ------------------------------
-
-
-def test_jaccard_guard_fail_branch(spark):
-    sh = word_shingles(_docs(spark), "doc_id", "text", n=3)
-    spark.conf.set("spark.welearn.pairGuard.budget", "100")
-    try:
-        # the guard probes at BUILD time (eager, documented in
-        # _volume_guard) — the verdict arrives before any sink runs
-        with pytest.raises(PairVolumeExceeded) as ei:
-            jaccard_pairs(sh, "doc_id", threshold=0.0)
-        # 4 shingle buckets x C(24,2) = 1104 pairs, measured exactly
-        assert ei.value.projected_pairs == 4 * 276
-        assert "Σ C(bucket,2)" in str(ei.value)
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.budget")
-
-
-def test_jaccard_guard_sample_branch_bounds_and_subsets(spark):
-    sh = word_shingles(_docs(spark), "doc_id", "text", n=3)
-    full = {
-        (r["a_id"], r["b_id"])
-        for r in jaccard_pairs(sh, "doc_id", threshold=0.0).collect()
-    }
-    spark.conf.set("spark.welearn.pairGuard.mode", "sample")
-    spark.conf.set("spark.welearn.pairGuard.budget", "2k")
-    try:
-        sampled = {
-            (r["a_id"], r["b_id"])
-            for r in jaccard_pairs(sh, "doc_id", threshold=0.0).collect()
-        }
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.mode")
-        spark.conf.unset("spark.welearn.pairGuard.budget")
-    assert sampled and sampled < full  # engaged, never invents a pair
-    # member sampling keeps whole documents: jaccard values of kept
-    # pairs are the full run's (sizes computed per doc, not per sample)
-    full_j = {
-        (r["a_id"], r["b_id"]): r["jaccard"]
-        for r in jaccard_pairs(sh, "doc_id", threshold=0.0).collect()
-    }
-    assert all(full_j[p] == 1.0 for p in sampled)
-
-
-def test_jaccard_passthrough_and_chunk_invariance(spark):
-    """Under budget the guard is a no-op (same pairs as guard=False),
-    and the chunk sub-split never changes the pair set — the rewrite
-    off the collect_list idiom is output-invariant."""
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 5} common tail tokens here {i % 3}") for i in range(30)],
-        ["doc_id", "text"],
-    )
-    sh = word_shingles(docs, "doc_id", "text", n=2)
-
-    def pairs(**kw):
-        return sorted(
-            (r["a_id"], r["b_id"], r["jaccard"])
-            for r in jaccard_pairs(sh, "doc_id", threshold=0.05, **kw).collect()
-        )
-
-    base = pairs(guard=False)
-    assert base
-    assert pairs() == base
-    assert pairs(chunk_target=2) == base  # forced multi-chunk splits
-    assert all(a < b for a, b, _ in base)
-
-
-def test_semantic_dedup_guard_engages_on_tiny_budget(spark, sf_dir):
-    """semantic_dedup_flags now pre-flights its within-cluster chunk
-    join with the replicated-volume model: a sub-worst-case budget
-    forces the probe and the fail verdict; the default budget leaves
-    the gated output untouched (oracle-verified separately)."""
-    from welearn_datastack_spark.plans.registry import REGISTRY, _load_groups
-
-    _load_groups()
-    spark.conf.set("spark.welearn.pairGuard.budget", "10")
-    try:
-        with pytest.raises(PairVolumeExceeded) as ei:
-            REGISTRY["semantic_dedup_flags"].build(spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        assert "replicated chunk-join input rows" in str(ei.value)
-    finally:
-        spark.conf.unset("spark.welearn.pairGuard.budget")
-
-
-def test_persist_on_probe_caches_and_fail_branch_releases(spark):
-    df = spark.range(50).select(
-        F.col("id").alias("doc_id"), F.lit(0).alias("b"), F.lit("k").alias("bk")
-    )
-    # passthrough: probe ran (no worst-case hint), frame left persisted
-    out = replicated_volume_guard(
-        df, ["b", "bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
-    )
-    assert out.storageLevel.useMemory
-    out.unpersist()
-    # fail: the persist must be RELEASED before the raise (a guarded
-    # query that declines to run must not leak executor storage).
-    # chunk_target differs from the call above so the probe_key is
-    # distinct — a _PROBE_MEMO hit would skip the persist entirely and
-    # make this assertion vacuous (round-13 review finding)
-    with pytest.raises(PairVolumeExceeded):
-        replicated_volume_guard(
-            df, ["b", "bk"], "doc_id", budget_bytes=10,
-            chunk_target=128, persist_on_probe=True,
-        )
-    assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
-    # and a later guarded run is unaffected by the released cache
-    out2 = replicated_volume_guard(
-        df, ["b", "bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
-    )
-    assert out2.count() == 50
-    out2.unpersist()
 
 
 # --- adjudicator verdict matrix completion (round-13 item 4):

@@ -1,10 +1,9 @@
 """Round-15 pins: bench cache hygiene between queries (r14 verdict
-item 1 — per-query storage accounting + guard/catalog cache release so
-no query's lingering persists perturb later walls), snapshot-failure
-memo disabling (r14 ADVICE #4), round_close adjudication-survivor
-filtering and dirty-stamp staleness (r14 ADVICE #1/#2), and the
-corpus-tagged canonical naming that promotes zipf-50k to a first-class
-comparator (r14 verdict item 6)."""
+item 1 — per-query storage accounting + catalog cache release so no
+query's lingering persists perturb later walls), round_close
+adjudication-survivor filtering and dirty-stamp staleness (r14 ADVICE
+#1/#2), and the corpus-tagged canonical naming that promotes zipf-50k
+to a first-class comparator (r14 verdict item 6)."""
 
 from __future__ import annotations
 
@@ -15,15 +14,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-import welearn_datastack_spark.operators.dedup as dedup_mod
-from welearn_datastack_spark.operators.dedup import (
-    _GUARD_PERSISTS,
-    _PROBE_MEMO,
-    _input_snapshot,
-    clear_probe_memo,
-    pair_volume_guard,
-    release_guard_caches,
-)
+from welearn_datastack_spark.operators.dedup import pair_volume_guard
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -46,29 +37,6 @@ def round_close():
     return _load_module("round_close_r15", REPO / "tools" / "round_close.py")
 
 
-# --- snapshot failure disables memoization (r14 ADVICE #4) -----------
-
-
-def test_input_snapshot_returns_none_on_listing_failure(spark):
-    class Boom:
-        def inputFiles(self):
-            raise RuntimeError("listing unavailable")
-
-    assert _input_snapshot(Boom()) is None
-
-
-def test_memo_skipped_when_snapshot_fails(spark, monkeypatch):
-    """A plan whose input listing fails must RE-PROBE every build —
-    a plan-hash-only memo key could stale-hit after an unlistable
-    source was rewritten in place (the under-gating hazard)."""
-    clear_probe_memo()
-    monkeypatch.setattr(dedup_mod, "_input_snapshot", lambda df: None)
-    df = spark.createDataFrame([(1, "a"), (2, "a")], ["doc_id", "bk"])
-    out = pair_volume_guard(df, ["bk"], "doc_id", budget_bytes=1 << 30)
-    assert out.count() == 2
-    assert len(_PROBE_MEMO) == 0  # nothing memoized under a None key
-
-
 # --- bench cache hygiene (r14 verdict item 1) -------------------------
 
 
@@ -76,21 +44,22 @@ def test_post_query_hygiene_clears_guard_persists(spark, bench):
     """The pin for 'cache-clean state between bench families': a query
     that left a persist_on_probe cache behind is detected (nonzero
     storage record) and the session is returned to a clean block
-    manager + empty guard registry before the next query runs."""
-    clear_probe_memo()
-    release_guard_caches()
+    manager, with the guard's frame uncached, before the next query
+    runs."""
     spark.catalog.clearCache()
     df = spark.createDataFrame([(i, "a") for i in range(50)], ["doc_id", "bk"])
     guarded = pair_volume_guard(
         df, ["bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
     )
     guarded.count()  # materialize the persist (what a bench sink does)
-    assert len(_GUARD_PERSISTS) == 1
+    assert guarded.storageLevel.useMemory
     rec = bench.post_query_hygiene(spark)
     assert rec is not None and rec["rdds"] >= 1
     assert rec["mem_bytes"] + rec["disk_bytes"] > 0
     # post-state: clean JVM for the next query
-    assert len(_GUARD_PERSISTS) == 0
+    sl = guarded.storageLevel
+    assert not sl.useMemory and not sl.useDisk
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     after = bench._storage_info(spark)
     assert after is not None and after["rdds"] == 0
     # idempotent: a clean session records clean and clears nothing
@@ -153,18 +122,6 @@ def test_parse_sf_dir_tags(bench):
     assert bench._parse_sf_dir("/tmp/welearn_sf10_realvocab") == (10.0, "realvocab")
     assert bench._parse_sf_dir("/root/testdata/sf0.001") == (0.001, None)
     assert bench._parse_sf_dir("/no/scale/here") == (None, None)
-
-
-def test_gen_sf_regen_invalidates_probe_memo(spark):
-    """r14 verdict item 5: the corpora-regen tool calls the memo hook,
-    so an in-session in-place rewrite cannot stale-hit a verdict."""
-    gen = _load_module("gen_sf_r15", REPO / "tools" / "gen_sf.py")
-    clear_probe_memo()
-    df = spark.createDataFrame([(1, "a")], ["doc_id", "bk"])
-    pair_volume_guard(df, ["bk"], "doc_id", budget_bytes=1 << 30)
-    assert len(_PROBE_MEMO) == 1
-    gen._invalidate_guard_memos()
-    assert len(_PROBE_MEMO) == 0
 
 
 # --- plan pins for the round's new queries ----------------------------
@@ -297,35 +254,6 @@ def test_stamp_staleness_flags_dirty_rev(round_close, tmp_path):
     assert round_close.stamp_staleness(tmp_path / "missing.json") == "no artifact"
     p.write_text(json.dumps({}))
     assert "no rev" in round_close.stamp_staleness(p)
-
-
-def test_memo_count_invalidates_on_rewrite(spark, tmp_path):
-    """r15 opt: the sizing-count memo must key on input content — a
-    same-path in-place rewrite re-counts, a repeat build memo-hits,
-    and clear_count_memo drops everything (the regen hook)."""
-    from welearn_datastack_spark.sources.tables import (
-        _COUNT_MEMO,
-        clear_count_memo,
-        memo_count,
-    )
-
-    p = str(tmp_path / "t.parquet")
-    spark.range(7).write.mode("overwrite").parquet(p)
-    clear_count_memo()
-    assert memo_count(spark.read.parquet(p)) == 7
-    n_keys = len(_COUNT_MEMO)
-    assert n_keys == 1
-    # repeat build of the same plan over unchanged files: memo hit
-    assert memo_count(spark.read.parquet(p)) == 7
-    assert len(_COUNT_MEMO) == n_keys
-    # in-place rewrite: the snapshot (mtime/size/paths) changes, the
-    # stale 7 must not be served
-    import time
-
-    time.sleep(0.05)  # mtime_ns granularity guard
-    spark.range(11).write.mode("overwrite").parquet(p)
-    assert memo_count(spark.read.parquet(p)) == 11
-    assert clear_count_memo() >= 1 and not _COUNT_MEMO
 
 
 def test_jaccard_pairs_pin_is_result_invariant(spark):

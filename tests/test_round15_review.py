@@ -112,7 +112,10 @@ def test_post_query_hygiene_clears_lazy_cache_entries(spark):
 
 
 def test_gen_sf_regen_releases_live_guard_caches(spark):
-    from welearn_datastack_spark.operators import dedup
+    """A regen inside a live session must not leave guard persists (or
+    any other cached frame over the old files) to serve stale data:
+    the hook empties the active session's CacheManager."""
+    from welearn_datastack_spark.operators.dedup import pair_volume_guard
 
     sys.path.insert(0, str(REPO / "tools"))
     try:
@@ -120,13 +123,16 @@ def test_gen_sf_regen_releases_live_guard_caches(spark):
     finally:
         sys.path.pop(0)
 
-    df = spark.range(50).selectExpr("id")
-    df.persist().count()
-    dedup._GUARD_PERSISTS["__t__"] = df
+    df = spark.range(50).selectExpr("id AS doc_id", "'a' AS bk")
+    guarded = pair_volume_guard(
+        df, ["bk"], "doc_id", budget_bytes=1 << 30, persist_on_probe=True
+    )
+    guarded.count()
+    cm = spark._jsparkSession.sharedState().cacheManager()
     try:
+        assert not cm.isEmpty()
         gen_sf._invalidate_guard_memos()
-        assert "__t__" not in dedup._GUARD_PERSISTS
+        assert cm.isEmpty()
         assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
     finally:
-        dedup._GUARD_PERSISTS.pop("__t__", None)
-        df.unpersist()
+        guarded.unpersist()

@@ -99,7 +99,8 @@ def extract_ted(
     inline the CreateNamedStruct and the full expressions (notably
     ``predict_readability``'s three regex passes over the transcript)
     would be evaluated and discarded. Default ``None`` computes every
-    field (the plugin contract)."""
+    field (the plugin contract). A name that is not a ``details``
+    field raises ``ValueError`` rather than quietly becoming a NULL."""
     parsed = responses.select(
         F.from_json(F.col(payload_col), TED_RESPONSE_SCHEMA).alias("_p")
     )
@@ -166,6 +167,16 @@ def extract_ted(
         "publication_date": T.DoubleType(),
         "type": T.StringType(),
     }
+    if details_fields is not None:
+        unknown = sorted(set(details_fields) - field_exprs.keys())
+        if unknown:
+            raise ValueError(
+                f"extract_ted: unknown details_fields {unknown}; "
+                f"known: {sorted(field_exprs)}"
+            )
+    # cast to the declared struct so a computed field and its typed
+    # NULL stand-in carry the same nullability (the computed authors
+    # array is otherwise non-nullable)
     details = F.struct(
         *[
             (
@@ -175,7 +186,7 @@ def extract_ted(
             ).alias(name)
             for name in field_exprs
         ]
-    )
+    ).cast(T.StructType([T.StructField(n, t) for n, t in null_types.items()]))
 
     ok = F.col("_error").isNull()
     return staged.select(

@@ -422,12 +422,12 @@ def apply_transitions(
     row and may stay lazy. Both frames read only batch-source files,
     never the state files being appended to, so the self-read hazard
     the admitted checkpoint guards against does not arise on this
-    path — PROVIDED ``decisions`` is already pinned (every in-repo
-    caller localCheckpoints the probe result first; an un-pinned
-    decisions frame would re-read the state store through the
-    admitted-id semi-join exactly while the appends grow it, so the
-    precomputed path requires the same pin the default path performs
-    itself)."""
+    path — PROVIDED ``decisions`` is already pinned. Every in-repo
+    caller passes a materialized decisions frame (localCheckpoint or a
+    read of the written decision files); an un-pinned decisions frame
+    would re-read the state store through the admitted-id semi-join
+    exactly while the appends grow it, so the precomputed path
+    requires the same pin the default path performs itself."""
     new_ids = decisions.filter(F.col("state") == "new").select("doc_id")
     if batch_hashes is not None and batch_bands is not None:
         # the admitted count rides the (smaller) hash append as an

@@ -353,6 +353,12 @@ def stream_ingest_probe(
     admitted row), and state remains exactly correct. Decisions are
     written BEFORE the state transition, so in the no-failure path
     each document's decision reflects the state at its own arrival.
+    An EMPTY batch (a landed file with no rows) writes its
+    ``batch_id=N`` directory and then deletes it, leaving neither
+    decisions nor state appends. A crash inside that window leaves a
+    data-free directory (schema-only files) in the log; the replayed
+    batch overwrites and deletes it again, and readers of the log see
+    no rows from it in any case.
 
     At 100 TB the state store is the bucketed-table layout
     (``pipeline/ingest_increment.build_state_bucketed``): the probe
@@ -379,9 +385,10 @@ def stream_ingest_probe(
         # pin the decisions before the writes: they derive from a lazy
         # probe over the very state files apply_transitions appends to.
         # |decisions| == |batch| by construction (one decision per
-        # incoming doc), so the emptiness test rides the checkpoint as
-        # an Observation instead of a separate isEmpty job per batch
-        # (r15 opt) — an empty replay batch still writes nothing
+        # incoming doc), so the emptiness test rides the decision write
+        # as an Observation instead of a separate isEmpty job per batch
+        # (r15 opt) — an empty batch's decision directory is written,
+        # then removed below, so the log gains nothing from it
         from pyspark.sql import Observation
 
         # the batch's band frame feeds BOTH the probe's near leg and
@@ -413,9 +420,12 @@ def stream_ingest_probe(
         dec_dir = f"{out_dir}/batch_id={batch_id}"
         decisions.write.mode("overwrite").parquet(dec_dir)
         if obs.get["c"] == 0:
-            import shutil
-
-            shutil.rmtree(dec_dir, ignore_errors=True)
+            # through the Hadoop FileSystem of the directory's scheme,
+            # so the cleanup works on object storage as well as local
+            # disk (a recursive delete of a missing path is a no-op)
+            jvm = spark._jvm
+            path = jvm.org.apache.hadoop.fs.Path(dec_dir)
+            path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
             return
         apply_transitions(
             spark,
