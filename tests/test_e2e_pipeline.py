@@ -5,9 +5,13 @@ Spark analog of running every reference node back-to-back."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from welearn_datastack_spark import jobs
 from welearn_datastack_spark.pipeline.classifier import classify_slices, document_verdicts
 from welearn_datastack_spark.pipeline.keywords import extract_and_link
 from welearn_datastack_spark.pipeline.qdrant_sync import (
@@ -91,6 +95,91 @@ def test_full_enrichment_chain(spark, sf_dir):
     # re-sync is idempotent
     again = sync(store, points.select("point_id", "document_id", "vector", "payload"))
     assert again.count() == n_points
+
+
+ENRICH_OUTPUTS = ("slices", "classified", "verdicts", "keywords", "keyword_links", "points")
+
+
+def _lazy_enrich_chain(spark, sf_dir):
+    """The six ``jobs enrich`` outputs as the stage functions chained
+    lazily, each write re-deriving its whole lineage."""
+    docs = load_table(spark, sf_dir, "documents")
+    slices = vectorize(
+        docs.select(F.col("doc_id").cast("string").alias("id"), F.col("text").alias("full_content")),
+        slice_length=20,
+    )
+    classified = classify_slices(
+        slices.select("document_id", F.col("order_sequence").alias("slice_seq"), "embedding")
+    )
+    dim, links = extract_and_link(
+        docs.select(F.col("doc_id").cast("string").alias("document_id"), F.col("text").alias("description")),
+        spark.createDataFrame([], "keyword string, id string"),
+        spark.createDataFrame([], "document_id string, keyword_id string"),
+    )
+    meta = docs.select(
+        F.col("doc_id").cast("string").alias("document_id"),
+        F.lit(None).cast("string").alias("title"),
+        F.lit(None).cast("string").alias("url"),
+        "lang",
+        F.col("source").alias("corpus"),
+        F.lit("stub-64").alias("model_name"),
+    )
+    points = build_points(
+        slices.join(
+            classified.select("document_id", F.col("slice_seq").alias("order_sequence"), "sdg"),
+            on=["document_id", "order_sequence"],
+        ),
+        meta,
+        doc_top2_sdgs(classified.select("document_id", "sdg")),
+    )
+    return {
+        "slices": slices,
+        "classified": classified.drop("embedding"),
+        "verdicts": document_verdicts(classified),
+        "keywords": dim,
+        "keyword_links": links,
+        "points": points,
+    }
+
+
+def _read_outputs(out):
+    """Per output directory: (Arrow schema, sorted canonical rows)."""
+    tables = {name: pq.read_table(f"{out}/{name}") for name in ENRICH_OUTPUTS}
+    return {
+        name: (t.schema.remove_metadata(),
+               sorted(json.dumps(r, sort_keys=True) for r in t.to_pylist()))
+        for name, t in tables.items()
+    }
+
+
+def test_jobs_enrich_matches_lazy_chain_and_reruns_identically(spark, sf_dir, tmp_path):
+    """``jobs enrich`` builds each stage from its predecessor's written
+    parquet; every output must hold the same rows (as a multiset) with
+    the same Arrow schema as the stage functions chained lazily. A
+    second run into the same --out (the overwrite/replay window)
+    must leave every directory identical to the first run's."""
+    ref = tmp_path / "lazy"
+    for name, df in _lazy_enrich_chain(spark, sf_dir).items():
+        df.write.parquet(str(ref / name))
+    expected = _read_outputs(ref)
+    assert all(rows for _, rows in expected.values())
+
+    out = str(tmp_path / "enrich")
+    # jobs.main's get_spark() applies the job's runtime confs to the
+    # shared test session; put the fixture's shuffle partitions back
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        jobs.main(["enrich", "--sf-dir", sf_dir, "--out", out])
+        first = _read_outputs(out)
+        jobs.main(["enrich", "--sf-dir", sf_dir, "--out", out])
+        second = _read_outputs(out)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+
+    for name in ENRICH_OUTPUTS:
+        assert first[name][0] == expected[name][0], (name, first[name][0], expected[name][0])
+        assert first[name][1] == expected[name][1], name
+        assert second[name] == first[name], name
 
 
 def test_ingest_increment_end_to_end(spark, sf_dir, tmp_path):

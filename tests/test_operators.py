@@ -443,6 +443,42 @@ def test_chunk_subsplit_bounds_hot_bucket_task_width(spark):
     assert max(ctrl_widths) > bound, (max(ctrl_widths), bound)
 
 
+def test_direct_and_chunked_self_pairs_equivalent_property(spark):
+    """For ANY bucket assignment and payload, direct_self_pairs and
+    chunked_self_pairs (at several chunk targets, including 1 — every
+    member its own chunk) must emit the identical unordered pair set
+    with identically aligned payloads. Deterministic pseudo-random
+    fixtures spanning the shapes that matter: singleton buckets, one
+    mega bucket, many mid buckets."""
+    import random as _r
+
+    from welearn_datastack_spark.operators.dedup import (
+        chunked_self_pairs,
+        direct_self_pairs,
+    )
+
+    rng = _r.Random(1407)
+    for trial in range(3):
+        n = [40, 25, 60][trial]
+        n_buckets = [1, 12, 5][trial]  # mega / sparse / mid
+        rows = [
+            (i, rng.randrange(n_buckets), f"p{i % 7}") for i in range(n)
+        ]
+        df = spark.createDataFrame(rows, ["id", "bk", "pl"])
+
+        def canon(out):
+            return sorted(
+                (r["bk"], r["a_id"], r["b_id"], r["a_pl"], r["b_pl"])
+                for r in out.collect()
+            )
+
+        base = canon(direct_self_pairs(df, ["bk"], "id", ["pl"]))
+        assert base and all(a < b for _, a, b, _, _ in base)
+        for ct in (1, 3, 256):
+            got = canon(chunked_self_pairs(df, ["bk"], "id", ["pl"], chunk_target=ct))
+            assert got == base, f"trial {trial}, chunk_target {ct}"
+
+
 def test_simhash_subsplit_bounds_boilerplate_corpus(spark):
     """Same empiricism for simhash_near_pairs: 1200 documents with an
     IDENTICAL fingerprint (the boilerplate worst case — every band

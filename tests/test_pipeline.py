@@ -5,8 +5,10 @@ tests/qdrant_syncronizer/) with deterministic stub models."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from welearn_datastack_spark import jobs
 from welearn_datastack_spark.functions.udfs import (
     pack_slices,
     slice_documents,
@@ -241,6 +243,33 @@ def test_pack_slices_split_oversized_preserves_all_words():
     assert rejoined == text
     assert len(preserved) == 3
     assert all(len(s.split()) <= 20 for s in preserved)
+
+
+@pytest.mark.parametrize("slice_length", [0, -3])
+def test_pack_slices_rejects_non_positive_length(slice_length):
+    # -3 used to return [] (every document silently lost); 0 died in
+    # range() inside a Python worker
+    with pytest.raises(ValueError, match="slice_length must be >= 1"):
+        pack_slices("one two three. four five six seven.", slice_length, True)
+
+
+@pytest.mark.parametrize("value", ["0", "-3"])
+def test_enrich_cli_rejects_non_positive_slice_length(value, capsys):
+    with pytest.raises(SystemExit) as exc:
+        jobs.main(["enrich", "--sf-dir", "unused", "--out", "unused", "--slice-length", value])
+    assert exc.value.code == 2  # argparse usage error, before any Spark work
+    assert "--slice-length: must be >= 1" in capsys.readouterr().err
+    assert jobs._at_least_one("1") == 1
+
+
+@pytest.mark.parametrize("value", ["-1", "101"])
+def test_curate_cli_rejects_keep_pct_outside_0_100(value, capsys):
+    # a negative value used to keep nothing without a word
+    with pytest.raises(SystemExit) as exc:
+        jobs.main(["curate", "--sf-dir", "unused", "--out", "unused", "--keep-pct", value])
+    assert exc.value.code == 2
+    assert "--keep-pct: must be within 0..100" in capsys.readouterr().err
+    assert (jobs._percent("0"), jobs._percent("100")) == (0, 100)
 
 
 def test_slice_udtf_matches_pack_slices(spark):

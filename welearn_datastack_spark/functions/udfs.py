@@ -153,7 +153,10 @@ def pack_slices(text: str, slice_length: int, split_oversized: bool = False) -> 
     punctuation-less document (the whole text is one "sentence"), so
     ``split_oversized=True`` instead chunks the oversized sentence
     into slice_length-word windows — the data-preserving mode the
-    pipeline uses (documented deviation)."""
+    pipeline uses (documented deviation). Raises ``ValueError`` when
+    ``slice_length`` < 1, which no slice could fit."""
+    if slice_length < 1:
+        raise ValueError(f"slice_length must be >= 1, got {slice_length}")
     slices: list[str] = []
     cur: list[str] = []
     cur_words = 0

@@ -6,6 +6,9 @@ keywords → vector points) over the ``documents`` table and writes
 each stage's output as parquet under O — the batch twin of the
 reference's Argo-scheduled node chain, collapsed into one Spark
 application (cron/Argo/Airflow schedules THIS instead of 10 pods).
+As in the reference chain, each stage reads its predecessor's
+written output: the write is the materialization, so no model runs
+twice (see ``_enrich`` for the crash window).
 
 ``... query --name Q --sf-dir D [--out O]`` runs any registered
 query; without --out it prints 20 rows (exploration), with --out it
@@ -21,8 +24,28 @@ from pyspark.sql import functions as F
 
 
 def _enrich(args: argparse.Namespace) -> None:
+    """Enrichment chain over the ``documents`` table: six parquet
+    directories under ``--out``, written in order — slices, classified,
+    verdicts, keywords, keyword_links, points.
+
+    The write is the materialization: every stage after ``slices``
+    builds from the parquet this run has just written, never from the
+    lazy frame that produced it, so slicing, embedding and both
+    classifiers each run once per document or slice. ``classified``
+    reads ``slices``; ``verdicts`` and ``points`` read ``classified``
+    (and ``points`` also ``slices``). Keyword extraction does not feed
+    a directory of its own, so its ``(document_id, keyword)`` rows are
+    persisted for the ``keywords`` and ``keyword_links`` writes and
+    released afterwards.
+
+    Crash window: a failure after write k leaves directories 1…k
+    complete and the later ones stale (from an earlier run) or absent.
+    Rerunning the job rewrites all six. A stage only reads a directory
+    after its write has committed, and no stage reads the directory it
+    writes, so an ``overwrite`` never races its own input."""
+    from .functions.udfs import extract_keywords
     from .pipeline.classifier import classify_slices, document_verdicts
-    from .pipeline.keywords import extract_and_link
+    from .pipeline.keywords import link_keywords
     from .pipeline.qdrant_sync import build_points, doc_top2_sdgs
     from .pipeline.vectorizer import vectorize
     from .session import get_spark
@@ -35,11 +58,15 @@ def _enrich(args: argparse.Namespace) -> None:
     )
     slices = vectorize(doc_in, slice_length=args.slice_length)
     slices.write.mode("overwrite").parquet(f"{args.out}/slices")
+    slices = spark.read.parquet(f"{args.out}/slices")
 
-    classified = classify_slices(
-        slices.select("document_id", F.col("order_sequence").alias("slice_seq"), "embedding")
-    )
+    # a parquet read makes every column nullable; order_sequence is a
+    # posexplode position, never null, and the coalesce keeps
+    # classified.slice_seq NOT NULL as written from the lazy slices
+    slice_seq = F.coalesce("order_sequence", F.lit(0)).alias("slice_seq")
+    classified = classify_slices(slices.select("document_id", slice_seq, "embedding"))
     classified.drop("embedding").write.mode("overwrite").parquet(f"{args.out}/classified")
+    classified = spark.read.parquet(f"{args.out}/classified")
     document_verdicts(classified).write.mode("overwrite").parquet(f"{args.out}/verdicts")
 
     spark_docs = docs.select(
@@ -47,9 +74,13 @@ def _enrich(args: argparse.Namespace) -> None:
     )
     dim0 = spark.createDataFrame([], "keyword string, id string")
     links0 = spark.createDataFrame([], "document_id string, keyword_id string")
-    dim, links = extract_and_link(spark_docs, dim0, links0)
-    dim.write.mode("overwrite").parquet(f"{args.out}/keywords")
-    links.write.mode("overwrite").parquet(f"{args.out}/keyword_links")
+    kws = extract_keywords(spark_docs, id_col="document_id", text_col="description").persist()
+    try:
+        dim, links = link_keywords(kws, dim0, links0)
+        dim.write.mode("overwrite").parquet(f"{args.out}/keywords")
+        links.write.mode("overwrite").parquet(f"{args.out}/keyword_links")
+    finally:
+        kws.unpersist()
 
     meta = docs.select(
         F.col("doc_id").cast("string").alias("document_id"),
@@ -178,6 +209,20 @@ def _query(args: argparse.Namespace) -> None:
         df.show(20, truncate=80)
 
 
+def _at_least_one(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
+def _percent(text: str) -> int:
+    n = int(text)
+    if not 0 <= n <= 100:
+        raise argparse.ArgumentTypeError(f"must be within 0..100, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(prog="welearn_datastack_spark.jobs")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -185,14 +230,14 @@ def main(argv: list[str] | None = None) -> None:
     e = sub.add_parser("enrich", help="full enrichment pipeline over the documents table")
     e.add_argument("--sf-dir", required=True)
     e.add_argument("--out", required=True)
-    e.add_argument("--slice-length", type=int, default=20)
+    e.add_argument("--slice-length", type=_at_least_one, default=20)
     e.set_defaults(fn=_enrich)
 
     c = sub.add_parser("curate", help="dedup + quality-filter + sample the documents table")
     c.add_argument("--sf-dir", required=True)
     c.add_argument("--out", required=True)
     c.add_argument("--min-words", type=int, default=10)
-    c.add_argument("--keep-pct", type=int, default=100)
+    c.add_argument("--keep-pct", type=_percent, default=100)
     c.set_defaults(fn=_curate)
 
     ii = sub.add_parser(

@@ -16,6 +16,28 @@ from ..functions.udfs import extract_keywords
 from ..operators.relational import get_or_create, overwrite_by_key
 
 
+def link_keywords(
+    kws: DataFrame,
+    keyword_dim: DataFrame,
+    existing_links: DataFrame,
+    id_col: str = "document_id",
+) -> tuple[DataFrame, DataFrame]:
+    """Returns (updated keyword dimension, updated link table) from the
+    extracted ``(id_col, keyword)`` rows.
+
+    The dictionary update is MERGE-style and idempotent (J8); the
+    link replacement is overwrite-by-key on the document id — exactly
+    the reference's delete-then-insert (keywords_extractor.py:44–60)
+    without the transaction. Both outputs read ``kws``, the links more
+    than once; a caller that forces both persists ``kws`` first, or
+    the extraction behind it reruns for every read."""
+    dim = get_or_create(keyword_dim, kws, key="keyword", id_col="id")
+    links = kws.join(F.broadcast(dim), on="keyword").select(
+        F.col(id_col), F.col("id").alias("keyword_id")
+    )
+    return dim, overwrite_by_key(existing_links, links, key=id_col)
+
+
 def extract_and_link(
     docs: DataFrame,
     keyword_dim: DataFrame,
@@ -24,15 +46,9 @@ def extract_and_link(
     text_col: str = "description",
     model_loader: Callable | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (updated keyword dimension, updated link table).
-
-    The dictionary update is MERGE-style and idempotent (J8); the
-    link replacement is overwrite-by-key on the document id — exactly
-    the reference's delete-then-insert (keywords_extractor.py:44–60)
-    without the transaction."""
+    """Returns (updated keyword dimension, updated link table):
+    ``extract_keywords`` composed with ``link_keywords``. Lazy — each
+    output re-runs the extraction when forced; ``jobs enrich`` calls
+    the two halves itself so the extraction runs once per job."""
     kws = extract_keywords(docs, id_col=id_col, text_col=text_col, model_loader=model_loader)
-    dim = get_or_create(keyword_dim, kws, key="keyword", id_col="id")
-    links = kws.join(F.broadcast(dim), on="keyword").select(
-        F.col(id_col), F.col("id").alias("keyword_id")
-    )
-    return dim, overwrite_by_key(existing_links, links, key=id_col)
+    return link_keywords(kws, keyword_dim, existing_links, id_col=id_col)
