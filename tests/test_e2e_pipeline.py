@@ -182,6 +182,55 @@ def test_jobs_enrich_matches_lazy_chain_and_reruns_identically(spark, sf_dir, tm
         assert second[name] == first[name], name
 
 
+def _run_job(spark, argv, capsys):
+    """``jobs.main(argv)``; returns its stdout lines. jobs.main's
+    get_spark() applies the job's runtime confs to the shared test
+    session, so the fixture's shuffle partitions are put back."""
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    capsys.readouterr()
+    try:
+        jobs.main(argv)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    return capsys.readouterr().out.splitlines()
+
+
+def test_jobs_enrich_stage_report_counts_written_rows(spark, sf_dir, tmp_path, capsys):
+    """The closing JSON line reports the rows written to each output
+    (counted by Observations on the writes); each count equals the
+    rows read back from its directory."""
+    out = str(tmp_path / "enrich")
+    lines = _run_job(spark, ["enrich", "--sf-dir", sf_dir, "--out", out], capsys)
+    report = json.loads(lines[-1])
+    assert report["job"] == "enrich" and report["out"] == out
+    rows = report["rows_written"]
+    assert list(rows) == list(ENRICH_OUTPUTS)
+    for name in ENRICH_OUTPUTS:
+        assert rows[name] == pq.read_table(f"{out}/{name}").num_rows > 0, name
+    assert lines[-2] == f"enrich complete: {rows['points']} points written to {out}"
+
+
+def test_jobs_curate_prints_observed_row_count(spark, sf_dir, tmp_path, capsys):
+    n_docs = load_table(spark, sf_dir, "documents").count()
+    for keep_pct in ("100", "0"):
+        out = str(tmp_path / f"curate{keep_pct}")
+        lines = _run_job(
+            spark, ["curate", "--sf-dir", sf_dir, "--out", out, "--keep-pct", keep_pct], capsys
+        )
+        n_out = pq.read_table(out).num_rows
+        assert lines == [f"curate complete: {n_docs} -> {n_out} documents ({out})"]
+        assert (n_out > 0) == (keep_pct == "100")
+
+
+def test_jobs_query_out_prints_observed_row_count(spark, sf_dir, tmp_path, capsys):
+    out = str(tmp_path / "query")
+    argv = ["query", "--name", "semi_join_recent_customers", "--sf-dir", sf_dir, "--out", out]
+    lines = _run_job(spark, argv, capsys)
+    n_out = pq.read_table(out).num_rows
+    assert n_out > 0
+    assert lines[-1] == f"wrote {n_out} rows to {out}"
+
+
 def test_ingest_increment_end_to_end(spark, sf_dir, tmp_path):
     """The composed incremental-ingest pipeline: state build → probe →
     decisions → state transitions, with the two structural guarantees

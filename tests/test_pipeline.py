@@ -4,6 +4,8 @@ tests/qdrant_syncronizer/) with deterministic stub models."""
 
 from __future__ import annotations
 
+from hashlib import md5
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -24,7 +26,7 @@ from welearn_datastack_spark.pipeline.collector import (
     split_errors,
     validate,
 )
-from welearn_datastack_spark.pipeline.keywords import extract_and_link
+from welearn_datastack_spark.pipeline.keywords import extract_and_link, link_keywords
 from welearn_datastack_spark.pipeline.qdrant_sync import (
     build_points,
     doc_top2_sdgs,
@@ -147,6 +149,42 @@ def test_keywords_get_or_create_and_relink(spark):
     assert {r["document_id"] for r in link_rows} == {"d1", "d2"}
     # d1's solar link must resolve to the pre-existing id
     assert ("d1", "kw-solar") in {(r["document_id"], r["keyword_id"]) for r in link_rows}
+
+
+def _rows_and_arrow_schema(df):
+    table = df.toArrow()
+    return sorted(map(repr, table.to_pylist())), table.schema
+
+
+def test_link_keywords_fresh_matches_merge_against_empty_stores(spark):
+    # d1 repeats a keyword and shares one with d2, d2 has a null
+    # keyword, d3 has no keywords at all
+    kws = spark.createDataFrame(
+        [("d1", ["solar", "solar", "power"]), ("d2", ["solar", None]), ("d3", [])],
+        "document_id string, keywords array<string>",
+    ).select("document_id", F.explode("keywords").alias("keyword"))
+    fresh = link_keywords(kws)
+    merged = link_keywords(
+        kws,
+        spark.createDataFrame([], "keyword string, id string"),
+        spark.createDataFrame([], "document_id string, keyword_id string"),
+    )
+    for got, want in zip(fresh, merged):
+        assert _rows_and_arrow_schema(got) == _rows_and_arrow_schema(want)
+
+    dim, links = fresh
+    dim_rows = [(r["keyword"], r["id"]) for r in dim.collect()]
+    assert sorted(dim_rows, key=repr) == sorted(
+        [("power", md5(b"power").hexdigest()), ("solar", md5(b"solar").hexdigest()), (None, None)],
+        key=repr,
+    )
+    link_rows = sorted((r["document_id"], r["keyword_id"]) for r in links.collect())
+    solar = md5(b"solar").hexdigest()
+    assert link_rows == sorted(
+        [("d1", solar), ("d1", solar), ("d1", md5(b"power").hexdigest()), ("d2", solar)]
+    )
+    with pytest.raises(ValueError, match="both keyword_dim and existing_links, or neither"):
+        link_keywords(kws, keyword_dim=dim)
 
 
 def test_qdrant_sync_routing_top2_and_overwrite(spark):

@@ -8,19 +8,33 @@ reference's Argo-scheduled node chain, collapsed into one Spark
 application (cron/Argo/Airflow schedules THIS instead of 10 pods).
 As in the reference chain, each stage reads its predecessor's
 written output: the write is the materialization, so no model runs
-twice (see ``_enrich`` for the crash window).
+twice (see ``_enrich`` for the crash window). It ends with a one-line
+JSON stage report: the rows written to each directory.
 
 ``... query --name Q --sf-dir D [--out O]`` runs any registered
 query; without --out it prints 20 rows (exploration), with --out it
-writes parquet (production).
+writes parquet (production). Every written-row count the jobs print
+comes from an ``Observation`` on the write, not from reading the
+output back.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _write_counted(df: DataFrame, path: str) -> int:
+    """Writes ``df`` as parquet to ``path`` (overwrite) and returns the
+    rows written, counted by an ``Observation`` on the write itself:
+    no read-back job."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
+    return obs.get["rows"]
 
 
 def _enrich(args: argparse.Namespace) -> None:
@@ -35,8 +49,14 @@ def _enrich(args: argparse.Namespace) -> None:
     reads ``slices``; ``verdicts`` and ``points`` read ``classified``
     (and ``points`` also ``slices``). Keyword extraction does not feed
     a directory of its own, so its ``(document_id, keyword)`` rows are
-    persisted for the ``keywords`` and ``keyword_links`` writes and
-    released afterwards.
+    persisted and released after the ``keywords`` and ``keyword_links``
+    writes. Both directories are written fresh, so ``link_keywords``
+    builds them without stores: the distinct keywords and a projection
+    of the extraction, with no MERGE against empty tables.
+
+    Each write carries an ``Observation`` of its row count, so the
+    closing stage report (one JSON line: rows written per directory)
+    adds no Spark job.
 
     Crash window: a failure after write k leaves directories 1…k
     complete and the later ones stale (from an earlier run) or absent.
@@ -52,12 +72,13 @@ def _enrich(args: argparse.Namespace) -> None:
     from .sources.tables import load_table
 
     spark = get_spark("welearn-enrich")
+    rows = {}
     docs = load_table(spark, args.sf_dir, "documents")
     doc_in = docs.select(
         F.col("doc_id").cast("string").alias("id"), F.col("text").alias("full_content")
     )
     slices = vectorize(doc_in, slice_length=args.slice_length)
-    slices.write.mode("overwrite").parquet(f"{args.out}/slices")
+    rows["slices"] = _write_counted(slices, f"{args.out}/slices")
     slices = spark.read.parquet(f"{args.out}/slices")
 
     # a parquet read makes every column nullable; order_sequence is a
@@ -65,20 +86,18 @@ def _enrich(args: argparse.Namespace) -> None:
     # classified.slice_seq NOT NULL as written from the lazy slices
     slice_seq = F.coalesce("order_sequence", F.lit(0)).alias("slice_seq")
     classified = classify_slices(slices.select("document_id", slice_seq, "embedding"))
-    classified.drop("embedding").write.mode("overwrite").parquet(f"{args.out}/classified")
+    rows["classified"] = _write_counted(classified.drop("embedding"), f"{args.out}/classified")
     classified = spark.read.parquet(f"{args.out}/classified")
-    document_verdicts(classified).write.mode("overwrite").parquet(f"{args.out}/verdicts")
+    rows["verdicts"] = _write_counted(document_verdicts(classified), f"{args.out}/verdicts")
 
     spark_docs = docs.select(
         F.col("doc_id").cast("string").alias("document_id"), F.col("text").alias("description")
     )
-    dim0 = spark.createDataFrame([], "keyword string, id string")
-    links0 = spark.createDataFrame([], "document_id string, keyword_id string")
     kws = extract_keywords(spark_docs, id_col="document_id", text_col="description").persist()
     try:
-        dim, links = link_keywords(kws, dim0, links0)
-        dim.write.mode("overwrite").parquet(f"{args.out}/keywords")
-        links.write.mode("overwrite").parquet(f"{args.out}/keyword_links")
+        dim, links = link_keywords(kws)
+        rows["keywords"] = _write_counted(dim, f"{args.out}/keywords")
+        rows["keyword_links"] = _write_counted(links, f"{args.out}/keyword_links")
     finally:
         kws.unpersist()
 
@@ -101,9 +120,9 @@ def _enrich(args: argparse.Namespace) -> None:
         meta,
         top2,
     )
-    points.write.mode("overwrite").parquet(f"{args.out}/points")
-    n = spark.read.parquet(f"{args.out}/points").count()
-    print(f"enrich complete: {n} points written to {args.out}")
+    rows["points"] = _write_counted(points, f"{args.out}/points")
+    print(f"enrich complete: {rows['points']} points written to {args.out}")
+    print(json.dumps({"job": "enrich", "out": args.out, "rows_written": rows}))
 
 
 def _curate(args: argparse.Namespace) -> None:
@@ -123,8 +142,8 @@ def _curate(args: argparse.Namespace) -> None:
     quality_ok = deduped.filter(words >= args.min_words)
     keep = hexint(F.col("doc_id").cast("string")) % 100 < args.keep_pct
     curated = quality_ok.filter(keep)
-    curated.write.mode("overwrite").parquet(args.out)
-    n_in, n_out = docs.count(), spark.read.parquet(args.out).count()
+    n_out = _write_counted(curated, args.out)
+    n_in = docs.count()
     print(f"curate complete: {n_in} -> {n_out} documents ({args.out})")
 
 
@@ -203,8 +222,7 @@ def _query(args: argparse.Namespace) -> None:
     spark = get_spark(f"welearn-query-{args.name}")
     df = REGISTRY[args.name].build(spark, args.sf_dir)
     if args.out:
-        df.write.mode("overwrite").parquet(args.out)
-        print(f"wrote {spark.read.parquet(args.out).count()} rows to {args.out}")
+        print(f"wrote {_write_counted(df, args.out)} rows to {args.out}")
     else:
         df.show(20, truncate=80)
 

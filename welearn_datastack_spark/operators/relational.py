@@ -26,6 +26,13 @@ def anti_join(facts: DataFrame, probe: DataFrame, on: list[str] | str) -> DataFr
     return facts.join(probe, on=on, how="left_anti")
 
 
+def created_id(key: Column) -> Column:
+    """The id a get-or-create gives a key it creates: the md5 of the
+    key, so the same key gets the same id in every run (a null key
+    gets a null id)."""
+    return F.md5(key)
+
+
 def get_or_create(
     dim: DataFrame,
     incoming: DataFrame,
@@ -44,7 +51,7 @@ def get_or_create(
     """
     incoming_keys = incoming.select(key).dropDuplicates([key])
     created = incoming_keys.join(dim.select(key), on=key, how="left_anti").withColumn(
-        id_col, F.md5(F.col(key))
+        id_col, created_id(F.col(key))
     )
     return dim.select(key, id_col).unionByName(created.select(key, id_col))
 
