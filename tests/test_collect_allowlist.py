@@ -20,7 +20,6 @@ _PAT = re.compile(r"\.(collect|first|toPandas|toLocalIterator)\(\)")
 
 # file (relative to the package) -> (allowed site count, why each is bounded)
 ALLOWED = {
-    "jobs.py": (1, "final CLI report: per-state counts, <= 3 rows"),
     "operators/dedup.py": (
         2,
         "the two pre-flight disk-budget probes, 1 row each: "

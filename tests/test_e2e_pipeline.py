@@ -9,6 +9,7 @@ import json
 
 import numpy as np
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from welearn_datastack_spark import jobs
@@ -232,15 +233,19 @@ def test_jobs_query_out_prints_observed_row_count(spark, sf_dir, tmp_path, capsy
 
 
 def test_ingest_increment_end_to_end(spark, sf_dir, tmp_path):
-    """The composed incremental-ingest pipeline: state build → probe →
-    decisions → state transitions, with the two structural guarantees
-    a production ingest needs — (a) probe cost scales with |batch|
-    (the stored corpus is a plain parquet scan of pre-computed state,
-    never re-shingled), (b) admitting a batch transitions state so a
-    re-probe of the same batch flags every doc an exact duplicate."""
+    """The incremental-ingest cycle: state build → probe → decisions →
+    admission, with the two structural guarantees a production ingest
+    needs — (a) probe cost scales with |batch| (the stored corpus is a
+    plain parquet scan of pre-computed state, never re-shingled), (b)
+    admitting a batch transitions state so a re-probe of the same
+    batch flags every doc an exact duplicate. After ``ingest_batch``
+    the store must hold exactly the hashes and bands of corpus ∪
+    admitted docs, computed directly from their text."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
-        apply_transitions,
+        band_keys,
         build_state,
+        content_hashes,
+        ingest_batch,
         ingest_increment,
         probe_batch,
     )
@@ -282,32 +287,42 @@ def test_ingest_increment_end_to_end(spark, sf_dir, tmp_path):
         else:
             assert r["exact_dup_of"] is None
 
-    # (b) transitions: admitted NEW docs join the state; re-probing
-    # the SAME batch now finds each former-new doc as an exact dup of
-    # itself (its hash is in the store)
-    n_new = sum(1 for r in rows if r["state"] == "new")
-    admitted = apply_transitions(spark, batch, decisions, state)
-    assert admitted == n_new
+    # (b) the ingest cycle writes the same decisions it probed, counts
+    # them per state, and admits the NEW docs into the state
+    key = lambda r: (r["doc_id"], r["exact_dup_of"], r["near_dup"], r["state"])
+    written, decided, admitted = ingest_batch(spark, batch, state, str(tmp_path / "dec"))
+    assert sorted(map(key, written.collect())) == sorted(map(key, rows))
+    assert decided == {s: sum(r["state"] == s for r in rows) for s in ("exact_dup", "near_dup", "new")}
+    new_ids = [d for d, r in got.items() if r["state"] == "new"]
+    assert admitted == len(new_ids) > 0
+
+    # the store holds exactly corpus ∪ admitted, hashed directly
+    stored = docs.filter(~batch_pred | F.col("doc_id").isin(new_ids))
+    for leg, expected in (("doc_hashes", content_hashes(stored)), ("band_store", band_keys(stored))):
+        assert sorted(map(tuple, spark.read.parquet(f"{state}/{leg}").collect())) == sorted(
+            map(tuple, expected.collect())
+        ), leg
+
+    # re-probing the SAME batch now finds each former-new doc as an
+    # exact dup of itself (its hash is in the store)
     reprobe = {r["doc_id"]: r for r in probe_batch(spark, batch, state).collect()}
-    for doc_id, r in got.items():
-        if r["state"] == "new":
-            assert reprobe[doc_id]["state"] == "exact_dup"
-            assert reprobe[doc_id]["exact_dup_of"] == doc_id
+    for doc_id in new_ids:
+        assert reprobe[doc_id]["state"] == "exact_dup"
+        assert reprobe[doc_id]["exact_dup_of"] == doc_id
 
     # the one-call composed job over a fresh state dir matches the
     # step-by-step decisions
     state2 = str(tmp_path / "state2")
     out = str(tmp_path / "out")
-    composed = ingest_increment(spark, docs, state2, out_dir=out, batch_mod=5)
-    assert {(r["doc_id"], r["state"]) for r in composed.collect()} == {
+    ingest_increment(spark, docs, state2, out, batch_mod=5)
+    assert {(r["doc_id"], r["state"]) for r in spark.read.parquet(out).collect()} == {
         (r["doc_id"], r["state"]) for r in rows
     }
 
 
 def test_ingest_params_persisted_with_state(spark, sf_dir, tmp_path):
     """The LSH parameterization is a property of the STATE STORE:
-    build_state persists it, probe_batch/apply_transitions read it
-    back, and a later ingest_increment call passing DIFFERENT params
+    build_state persists it, probe_batch/ingest_batch read it back, and a later ingest_increment call passing DIFFERENT params
     must be overruled by the store's own (probing a store with
     mismatched bands would silently find nothing)."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
@@ -336,7 +351,8 @@ def test_ingest_params_persisted_with_state(spark, sf_dir, tmp_path):
     # a composed call against the EXISTING store with conflicting
     # params: the store's persisted parameterization wins
     ingest_increment(
-        spark, docs, state, batch_mod=5, params=LshParams(n_hashes=4)
+        spark, docs, state, str(tmp_path / "out"), batch_mod=5,
+        params=LshParams(n_hashes=4),
     )
     assert load_params(state) == custom
 
@@ -460,10 +476,10 @@ def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
     discipline snapshot_tail_read proved for the state log, applied
     to the dedup state store."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
-        apply_transitions,
         build_state,
         compact_state,
         fold_state_bucketed,
+        ingest_batch,
         load_params,
         probe_batch,
         probe_batch_bucketed,
@@ -474,9 +490,7 @@ def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
     state = str(tmp_path / "state")
     build_state(docs.filter(m.isin(1, 2, 3)), state)
 
-    batch_a = docs.filter(m == 4)
-    dec_a = probe_batch(spark, batch_a, state).localCheckpoint(eager=True)
-    apply_transitions(spark, batch_a, dec_a, state)
+    ingest_batch(spark, docs.filter(m == 4), state, str(tmp_path / "dec_a"))
 
     key = lambda r: (r["doc_id"], r["exact_dup_of"], r["near_dup"], r["state"])
     batch_b = docs.filter(m == 0)
@@ -519,51 +533,420 @@ def test_state_maintenance_cycle_equivalence(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS maint_fold_test_band_store")
 
 
-def test_precomputed_batch_frames_equivalent(spark, sf_dir, tmp_path):
-    """r15 opt: probe_batch/apply_transitions accept the batch's
-    precomputed (pinned) hash/band frames so the minhash pipeline runs
-    once per ingest cycle instead of twice. The path must be
-    decision- AND state-equivalent to the default: same decisions
-    row-for-row, same admitted count, byte-identical state-store
-    contents after the transition."""
+def test_ingest_increment_state_on_file_uri(spark, sf_dir, tmp_path):
+    """A ``file://`` state URI goes through the Hadoop FileSystem of
+    its scheme for the first-run check and the params sidecar: the
+    first run builds the store with the custom params, the second finds
+    it, keeps those params over conflicting ones, and admits nothing —
+    each doc admitted by the first run is now its own exact dup, and
+    the near dups (never admitted) stay near dups."""
     from welearn_datastack_spark.pipeline.ingest_increment import (
-        apply_transitions,
-        band_keys,
-        build_state,
-        content_hashes,
-        probe_batch,
+        LshParams,
+        ingest_increment,
+        load_params,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    batch_pred = F.col("doc_id") % 5 == 0
-    batch = docs.filter(batch_pred)
+    state = (tmp_path / "state").as_uri()
+    custom = LshParams(shingle_n=2, n_hashes=12, rows_per_band=3)
+    key = lambda r: (r["doc_id"], r["exact_dup_of"], r["state"])
 
-    def run(state: str, precompute: bool):
-        build_state(docs.filter(~batch_pred), state)
-        if precompute:
-            bands = band_keys(batch).localCheckpoint(eager=True)
-            hashes = content_hashes(batch)
-            dec = probe_batch(
-                spark, batch, state, batch_hashes=hashes, batch_bands=bands
-            ).localCheckpoint(eager=True)
-            admitted = apply_transitions(
-                spark, batch, dec, state, batch_hashes=hashes, batch_bands=bands
-            )
-        else:
-            dec = probe_batch(spark, batch, state).localCheckpoint(eager=True)
-            admitted = apply_transitions(spark, batch, dec, state)
-        decisions = sorted(
-            (r["doc_id"], r["exact_dup_of"], r["near_dup"], r["state"])
-            for r in dec.collect()
-        )
-        stored_hashes = sorted(
-            map(tuple, spark.read.parquet(f"{state}/doc_hashes").collect())
-        )
-        stored_bands = sorted(
-            map(tuple, spark.read.parquet(f"{state}/band_store").collect())
-        )
-        return decisions, admitted, stored_hashes, stored_bands
+    first, decided, admitted = ingest_increment(spark, docs, state, str(tmp_path / "out1"), params=custom)
+    assert load_params(state) == custom
+    assert admitted == decided["new"] > 0
+    first = sorted(map(key, first.collect()))
 
-    default = run(str(tmp_path / "state_default"), precompute=False)
-    pinned = run(str(tmp_path / "state_pinned"), precompute=True)
-    assert pinned == default
+    second, decided, admitted = ingest_increment(spark, docs, state, str(tmp_path / "out2"))
+    assert load_params(state) == custom
+    assert admitted == decided["new"] == 0
+    assert sorted(map(key, second.collect())) == [
+        (d, d, "exact_dup") if s == "new" else (d, of, s) for d, of, s in first
+    ]
+
+
+def test_jobs_ingest_increment_stage_report_counts_written_rows(spark, sf_dir, tmp_path, capsys):
+    """The closing JSON line of ``jobs ingest-increment`` reports the
+    decisions per state and the documents admitted (counted by
+    Observations on the decision write and the hash append); each count
+    equals the rows read back. A second run against the same --state
+    admits nothing and adds no (empty) file to the store."""
+    import glob
+
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    argv = ["ingest-increment", "--sf-dir", sf_dir, "--state", state, "--out", out]
+    n_corpus = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 != 0).count()
+    admitted, state_files = [], []
+    for _ in range(2):
+        report = json.loads(_run_job(spark, argv, capsys)[-1])
+        assert report["job"] == "ingest-increment" and report["out"] == out
+        written = [r["state"] for r in pq.read_table(out).to_pylist()]
+        assert report["decisions"] == {
+            s: written.count(s) for s in ("exact_dup", "near_dup", "new")
+        }
+        admitted.append(report["admitted"])
+        assert pq.read_table(f"{state}/doc_hashes").num_rows == n_corpus + sum(admitted)
+        state_files.append(sorted(glob.glob(f"{state}/*/*.parquet")))
+    assert admitted[0] > 0 and admitted[1] == 0
+    assert state_files[1] == state_files[0]
+
+
+def test_decision_log_legacy_flat_layout_raises(tmp_path):
+    """A pre-batch_id flat decision log must be rejected before the
+    first micro-batch — mixing flat part-files with batch_id=N
+    subdirectories breaks partition discovery for every reader."""
+    from welearn_datastack_spark.streaming.state_machine import (
+        _check_decision_log_layout,
+    )
+
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "part-00000-legacy.snappy.parquet").write_bytes(b"PAR1")
+    with pytest.raises(RuntimeError, match="legacy flat"):
+        _check_decision_log_layout(str(out))
+    # the partitioned layout (and an empty dir) pass
+    (out / "part-00000-legacy.snappy.parquet").unlink()
+    (out / "batch_id=0").mkdir()
+    _check_decision_log_layout(str(out))
+    _check_decision_log_layout(str(tmp_path / "missing"))
+
+
+def test_decision_log_counting_schema_raises(spark, tmp_path):
+    """A decision log written by the counting-probe era
+    (n_near_candidates) must be rejected too: mixing it with
+    decision-only batches (near_dup) makes parquet schema resolution
+    silently null one column for every reader."""
+    from welearn_datastack_spark.streaming.state_machine import (
+        _check_decision_log_layout,
+    )
+
+    out = tmp_path / "out"
+    legacy = spark.createDataFrame(
+        [(1, None, 2, "near_dup")],
+        "doc_id long, exact_dup_of long, n_near_candidates long, state string",
+    )
+    legacy.coalesce(1).write.parquet(str(out / "batch_id=0"))
+    with pytest.raises(RuntimeError, match="counting-probe schema"):
+        _check_decision_log_layout(str(out))
+    # the current decision schema passes
+    import shutil
+
+    shutil.rmtree(out)
+    current = spark.createDataFrame(
+        [(1, None, True, "near_dup")],
+        "doc_id long, exact_dup_of long, near_dup boolean, state string",
+    )
+    current.coalesce(1).write.parquet(str(out / "batch_id=0"))
+    _check_decision_log_layout(str(out))
+
+
+def test_bucketed_store_params_roundtrip_and_conflict(spark, sf_dir):
+    """The bucketed store is self-describing: build persists the LSH
+    params as a band-store TBLPROPERTY, probe reads them back, and a
+    conflicting explicit parameterization raises instead of silently
+    probing with mismatched bands (which finds zero candidates)."""
+    from welearn_datastack_spark.pipeline.ingest_increment import (
+        LshParams,
+        build_state_bucketed,
+        load_table_params,
+        probe_batch_bucketed,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+        F.col("doc_id") < 200
+    )
+    params = LshParams(shingle_n=2, n_hashes=12, rows_per_band=3)
+    prefix = "params_roundtrip_test"
+    build_state_bucketed(docs.filter(F.col("doc_id") % 5 != 0), prefix, params=params)
+    try:
+        assert load_table_params(spark, prefix) == params
+        batch = docs.filter(F.col("doc_id") % 5 == 0)
+        # no explicit params: the persisted ones govern
+        dec = probe_batch_bucketed(spark, batch, prefix)
+        assert dec.count() == batch.count()
+        # matching explicit params are fine
+        probe_batch_bucketed(spark, batch, prefix, params=params)
+        with pytest.raises(ValueError, match="LSH params mismatch"):
+            probe_batch_bucketed(spark, batch, prefix, params=LshParams())
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
+
+
+def test_size_lsh_params_solves_the_s_curve():
+    """The sizing helper inverts s50 = (1/b)^(1/r): known anchors map
+    back exactly, the realized s50 lands near any target, more
+    permissive targets never cost more hashes than stricter ones, and
+    impossible targets fail loudly."""
+    from welearn_datastack_spark.pipeline.ingest_increment import (
+        LshParams,
+        size_lsh_params,
+    )
+
+    # the production default is the 0.5 anchor: 4 bands x 2 rows
+    assert size_lsh_params(0.5) == LshParams(3, 8, 2)
+    # the documented second parameterization: 8 bands x 2 rows
+    p = size_lsh_params(0.35)
+    assert (p.n_hashes, p.rows_per_band) == (16, 2)
+    assert abs(p.s50 - 0.35) < 0.01
+    # realized s50 tracks the target across the range
+    for t in (0.2, 0.3, 0.4, 0.6, 0.7, 0.8):
+        got = size_lsh_params(t, max_hashes=256)
+        assert abs(got.s50 - t) < 0.05, (t, got)
+    # lower threshold (more recall) needs at least as many hashes
+    assert size_lsh_params(0.3, max_hashes=256).n_hashes >= size_lsh_params(
+        0.6, max_hashes=256
+    ).n_hashes
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError):
+        size_lsh_params(0.05, max_hashes=8)  # unreachable in budget
+    with _pytest.raises(ValueError):
+        size_lsh_params(1.5)
+
+
+def test_wide_banding_raises_mid_similarity_recall(spark):
+    """The sizing helper's promise, validated empirically: moving
+    from the default (b=4, r=2; s50~0.5) to the 0.35-target sizing
+    (b=8, r=2; s50~0.354) must catch MORE mid-similarity pairs.
+    Structurally, band k is built from seeds (rk .. rk+r-1), so the
+    wide banding's first 4 bands ARE the default's bands — its
+    candidate set is a superset by construction; the extra 4 bands
+    buy the extra recall. Synthetic pairs near Jaccard ~0.35 (where
+    the default's s-curve gives ~0.4 hit rate and the wide one ~0.65)
+    make the gap deterministic and visible."""
+    from welearn_datastack_spark.operators.dedup import (
+        lsh_band_keys,
+        lsh_candidates,
+        minhash_signatures,
+        word_shingles,
+    )
+
+    rows = []
+    for i in range(60):
+        base = [f"w{i}_{j}" for j in range(30)]
+        # partner shares a prefix: trigram-shingle Jaccard lands in
+        # the 0.3-0.45 band (shared shingles / union)
+        partner = base[:16] + [f"x{i}_{j}" for j in range(14)]
+        rows.append((2 * i, " ".join(base)))
+        rows.append((2 * i + 1, " ".join(partner)))
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    sh = word_shingles(docs, "doc_id", "text", n=3)
+    true_pairs = {(2 * i, 2 * i + 1) for i in range(60)}
+
+    def caught(n_hashes: int) -> set:
+        sigs = minhash_signatures(sh, "doc_id", n_hashes=n_hashes)
+        cand = lsh_candidates(
+            lsh_band_keys(sigs, "doc_id", rows_per_band=2), "doc_id"
+        )
+        got = {(r["a_id"], r["b_id"]) for r in cand.collect()}
+        return got & true_pairs
+
+    default_caught = caught(8)
+    wide_caught = caught(16)
+    # superset by construction (shared leading bands) ...
+    assert default_caught <= wide_caught
+    # ... and the extra bands genuinely move mid-band recall
+    assert len(wide_caught) > len(default_caught), (
+        len(default_caught), len(wide_caught),
+    )
+    print(
+        f"mid-band recall: default {len(default_caught)}/60, "
+        f"wide {len(wide_caught)}/60"
+    )
+
+
+def test_decision_probe_matches_counting_probe(spark, sf_dir, tmp_path):
+    """The decision-only probe (production default: left_semi band
+    existence) and the counting diagnostic must yield IDENTICAL
+    (doc_id, exact_dup_of, state) decisions — only the near leg's
+    evidence differs (near_dup boolean vs partner multiplicity). The
+    decision plan must actually BE a semi join: no candidate-pair
+    aggregation may survive in it."""
+    from welearn_datastack_spark.pipeline.ingest_increment import (
+        build_state,
+        probe_batch,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    state = str(tmp_path / "state")
+    build_state(docs.filter(F.col("doc_id") % 5 != 0), state)
+    batch = docs.filter(F.col("doc_id") % 5 == 0)
+
+    decision = probe_batch(spark, batch, state)
+    counting = probe_batch(spark, batch, state, count_candidates=True)
+
+    plan = decision._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" in plan, plan[:1500]
+
+    key = lambda r: (r["doc_id"], r["exact_dup_of"], r["state"])
+    d = sorted(key(r) for r in decision.collect())
+    c = sorted(key(r) for r in counting.collect())
+    assert d == c
+    # and the boolean agrees with the count
+    nd = {r["doc_id"]: r["near_dup"] for r in decision.collect()}
+    for r in counting.collect():
+        assert nd[r["doc_id"]] == (r["n_near_candidates"] > 0), r
+
+
+def test_fold_state_bucketed_carries_params(spark, sf_dir, tmp_path):
+    """fold_state_bucketed moves the path store's lsh_params.json
+    sidecar into the folded tables' TBLPROPERTY, so a later
+    probe_batch_bucketed can never default-mismatch a non-default
+    store (the exact failure the sidecar exists to prevent)."""
+    from welearn_datastack_spark.pipeline.ingest_increment import (
+        LshParams,
+        build_state,
+        fold_state_bucketed,
+        load_table_params,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+        F.col("doc_id") < 100
+    )
+    params = LshParams(shingle_n=3, n_hashes=16, rows_per_band=4)
+    state = str(tmp_path / "state")
+    build_state(docs, state, params=params)
+    prefix = "params_fold_test"
+    fold_state_bucketed(spark, state, prefix)
+    try:
+        assert load_table_params(spark, prefix) == params
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_doc_hashes")
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_band_store")
+
+
+def test_decision_log_partial_migration_raises(spark, tmp_path):
+    """A MIXED decision log — one batch written by the counting era,
+    one by the decision era — must be rejected no matter which batch
+    the directory glob happens to order first. The round-10 guard
+    sampled only the first glob hit, so a partially-migrated log
+    passed whenever that hit was new-schema."""
+    from welearn_datastack_spark.streaming.state_machine import (
+        _check_decision_log_layout,
+    )
+
+    out = tmp_path / "out"
+    current = spark.createDataFrame(
+        [(1, None, True, "near_dup")],
+        "doc_id long, exact_dup_of long, near_dup boolean, state string",
+    )
+    # batch_id=0 sorts FIRST: the old single-sample guard would read
+    # it, see the new schema, and wave the mixed log through
+    current.coalesce(1).write.parquet(str(out / "batch_id=0"))
+    legacy = spark.createDataFrame(
+        [(2, None, 3, "near_dup")],
+        "doc_id long, exact_dup_of long, n_near_candidates long, state string",
+    )
+    legacy.coalesce(1).write.parquet(str(out / "batch_id=1"))
+    with pytest.raises(RuntimeError, match="counting-probe schema"):
+        _check_decision_log_layout(str(out))
+    # all-new-schema multi-batch log passes
+    import shutil
+
+    shutil.rmtree(out / "batch_id=1")
+    current.coalesce(1).write.parquet(str(out / "batch_id=1"))
+    _check_decision_log_layout(str(out))
+
+
+def test_stream_near_leg_is_decision_only(spark, sf_dir, tmp_path, monkeypatch):
+    """The STREAM's per-micro-batch probe must ride the decision-only
+    path: _probe (the probe inside ingest_batch) called with
+    count_candidates falsey, LeftSemi in the executed decision plan,
+    and no counting-era candidate
+    aggregation (n_near_candidates) anywhere in it. §21.4 proved the
+    BATCH probe's bytes linear; this pins that the streaming wrapper
+    cannot silently regress onto the counting leg whose bytes grow
+    with corpus collision density (4.72x per 3x at sf30)."""
+    import glob
+    import os
+    import shutil
+
+    import welearn_datastack_spark.pipeline.ingest_increment as inc
+    from welearn_datastack_spark.sources.tables import load_table
+    from welearn_datastack_spark.streaming.state_machine import stream_ingest_probe
+
+    captured: dict = {}
+    real = inc._probe
+
+    def spy(*frames, count_candidates=False):
+        d = real(*frames, count_candidates=count_candidates)
+        captured["count_candidates"] = count_candidates
+        captured["plan"] = d._jdf.queryExecution().executedPlan().toString()
+        return d
+
+    monkeypatch.setattr(inc, "_probe", spy)
+
+    docs = load_table(spark, sf_dir, "documents")
+    m = F.col("doc_id") % 5
+    work = str(tmp_path)
+    inc.build_state(docs.filter(m.isin(1, 2, 3)), f"{work}/state")
+    src = f"{work}/incoming"
+    docs.filter(m == 4).coalesce(1).write.mode("overwrite").parquet(f"{work}/tmp_a")
+    os.makedirs(src, exist_ok=True)
+    shutil.copy(glob.glob(f"{work}/tmp_a/part-*.parquet")[0], f"{src}/a.parquet")
+
+    stream_ingest_probe(spark, src, f"{work}/state", f"{work}/ckpt", f"{work}/out")
+
+    assert captured, "stream never reached _probe"
+    assert not captured["count_candidates"]
+    assert "LeftSemi" in captured["plan"], captured["plan"][:1500]
+    assert "n_near_candidates" not in captured["plan"]
+
+
+# SCALE.md §22.5 explains the stream probe's steep sf1→sf3 byte rung
+# (5.05x for 3x data) as a broadcast→exchange plan transition: at sf1
+# the stored state side fits under the broadcast threshold so the
+# semi-join leg pays no shuffle; by sf3 it is a real exchange. This
+# pins that mechanism: the SAME probe plan rides BroadcastHashJoin
+# when the state side is under the threshold and a shuffle join once
+# it is not — so a future change that made the probe super-linear
+# could no longer hide behind the "plan transition" sentence.
+
+
+def test_stream_probe_first_rung_is_broadcast_to_exchange_transition(spark, sf_dir):
+    from welearn_datastack_spark.operators.dedup import (
+        incremental_near_dup_ids,
+        lsh_band_keys,
+        minhash_signatures,
+        word_shingles,
+    )
+    from welearn_datastack_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+
+    def bands(d):
+        return lsh_band_keys(
+            minhash_signatures(word_shingles(d, "doc_id", "text", n=3), "doc_id", 8),
+            "doc_id",
+            rows_per_band=2,
+        )
+
+    stored = bands(docs.filter(F.col("doc_id") % 5 != 4))
+    new = bands(docs.filter(F.col("doc_id") % 5 == 4))
+
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+
+    def executed_plan(threshold):
+        old = {k: spark.conf.get(k, None) for k in keys}
+        try:
+            for k in keys:
+                spark.conf.set(k, threshold)
+            d = incremental_near_dup_ids(stored, new, "doc_id")
+            d.write.format("noop").mode("overwrite").save()
+            return d._jdf.queryExecution().executedPlan().toString()
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
+
+    # sf1 regime: state side under the threshold → broadcast semi leg
+    small = executed_plan("10485760b")
+    assert "BroadcastHashJoin" in small and "LeftSemi" in small, small[:1500]
+    # sf3+ regime: no broadcast eligibility → the semi leg is a real
+    # exchange-backed join (the byte rung §22.5 measured)
+    big = executed_plan("-1")
+    assert "LeftSemi" in big, big[:1500]
+    assert "BroadcastHashJoin" not in big, big[:1500]
+    assert "SortMergeJoin" in big or "ShuffledHashJoin" in big, big[:1500]

@@ -33,6 +33,7 @@ from welearn_datastack_spark.pipeline.qdrant_sync import (
     route_collections,
     sync,
 )
+from welearn_datastack_spark.pipeline.state import make_transitions
 from welearn_datastack_spark.pipeline.url_ingest import insert_urls
 from welearn_datastack_spark.pipeline.vectorizer import vectorize
 
@@ -300,6 +301,36 @@ def test_enrich_cli_rejects_non_positive_slice_length(value, capsys):
     assert jobs._at_least_one("1") == 1
 
 
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"n_hashes": 9, "rows_per_band": 2}, "must be a multiple of rows_per_band"),
+        ({"shingle_n": 0}, "must all be >= 1"),
+        ({"n_hashes": 0}, "must all be >= 1"),
+        ({"rows_per_band": -2}, "must all be >= 1"),
+    ],
+)
+def test_lsh_params_reject_bad_banding(kwargs, match):
+    # 9 hashes in rows of 2 used to build 5 bands while n_bands and
+    # s50 described 4
+    from welearn_datastack_spark.pipeline.ingest_increment import LshParams
+
+    with pytest.raises(ValueError, match=match):
+        LshParams(**kwargs)
+
+
+def test_ingest_increment_cli_rejects_bad_banding(capsys):
+    argv = ["ingest-increment", "--sf-dir", "unused", "--state", "unused", "--out", "unused"]
+    with pytest.raises(SystemExit) as exc:
+        jobs.main(argv + ["--n-hashes", "9", "--rows-per-band", "2"])
+    # rejected before any Spark work, with the reason
+    assert "n_hashes (9) must be a multiple of rows_per_band (2)" in str(exc.value.code)
+    with pytest.raises(SystemExit) as exc:
+        jobs.main(argv + ["--batch-mod", "0"])
+    assert exc.value.code == 2
+    assert "--batch-mod: must be >= 1" in capsys.readouterr().err
+
+
 @pytest.mark.parametrize("value", ["-1", "101"])
 def test_curate_cli_rejects_keep_pct_outside_0_100(value, capsys):
     # a negative value used to keep nothing without a word
@@ -410,3 +441,25 @@ def test_merge_details_strict_and_nonstrict(spark):
     strict = merge_details(df, {"duration": F.lit("9")}, strict=True)
     got2 = {r["id"]: _json.loads(r["details"]) for r in strict.collect()}
     assert got2["a"]["duration"] == "9"  # strict recompute overwrites
+
+
+def test_make_transitions_orders_small_batch(spark):
+    ids = spark.createDataFrame([(7,), (3,), (5,)], ["document_id"])
+    out = make_transitions(ids, "document_id", "url_retrieved", base_order=100)
+    rows = {r["document_id"]: r["operation_order"] for r in out.collect()}
+    # deterministic rank on the id, offset by base_order
+    assert rows == {3: 101, 5: 102, 7: 103}
+
+
+def test_make_transitions_guard_trips_on_unbounded_frame(spark):
+    """Feeding an over-ceiling frame into the single-task global
+    window must fail loudly (the 100 TB silent-serialization guard),
+    not quietly produce a one-core plan."""
+    from welearn_datastack_spark.operators.state_log import BOUNDED_INPUT_MAX_ROWS
+
+    big = spark.range(BOUNDED_INPUT_MAX_ROWS + 1).select(
+        F.col("id").alias("document_id")
+    )
+    out = make_transitions(big, "document_id", "url_retrieved", base_order=0)
+    with pytest.raises(Exception, match="bounded_input"):
+        out.agg(F.max("operation_order")).collect()

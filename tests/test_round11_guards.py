@@ -1,7 +1,7 @@
-"""Round-11 hardening pins: the partially-migrated decision-log schema
-guard, the fan-out evidence plane's remaining quadrants (mixed layout;
->128-file cap deactivation), the minPartitionNum conf mirror, and the
-DuckDB oracle's multi-file-layout read path."""
+"""Round-11 hardening pins: the fan-out evidence plane's remaining
+quadrants (mixed layout; >128-file cap deactivation), the
+minPartitionNum conf mirror, and the DuckDB oracle's multi-file-layout
+read path."""
 
 from __future__ import annotations
 
@@ -13,46 +13,8 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
-from pyspark.sql import functions as F
 
 REPO = Path(__file__).resolve().parent.parent
-
-
-# --- ADVICE r10: schema guard must sample one file PER batch ---------
-
-
-def test_decision_log_partial_migration_raises(spark, tmp_path):
-    """A MIXED decision log — one batch written by the counting era,
-    one by the decision era — must be rejected no matter which batch
-    the directory glob happens to order first. The round-10 guard
-    sampled only the first glob hit, so a partially-migrated log
-    passed whenever that hit was new-schema."""
-    from welearn_datastack_spark.streaming.state_machine import (
-        _check_decision_log_layout,
-    )
-
-    out = tmp_path / "out"
-    current = spark.createDataFrame(
-        [(1, None, True, "near_dup")],
-        "doc_id long, exact_dup_of long, near_dup boolean, state string",
-    )
-    # batch_id=0 sorts FIRST: the old single-sample guard would read
-    # it, see the new schema, and wave the mixed log through
-    current.coalesce(1).write.parquet(str(out / "batch_id=0"))
-    legacy = spark.createDataFrame(
-        [(2, None, 3, "near_dup")],
-        "doc_id long, exact_dup_of long, n_near_candidates long, state string",
-    )
-    legacy.coalesce(1).write.parquet(str(out / "batch_id=1"))
-    with pytest.raises(RuntimeError, match="counting-probe schema"):
-        _check_decision_log_layout(str(out))
-    # all-new-schema multi-batch log passes
-    import shutil
-
-    shutil.rmtree(out / "batch_id=1")
-    current.coalesce(1).write.parquet(str(out / "batch_id=1"))
-    _check_decision_log_layout(str(out))
 
 
 # --- fan-out evidence plane: mixed layout quadrant -------------------
@@ -241,53 +203,3 @@ def test_duckdb_oracle_reads_multifile_layout(spark, tmp_path):
         spark_n = spark.read.parquet(os.path.join(out, f"{name}.parquet")).count()
         assert duck_n == spark_n and duck_n > 0, (name, duck_n, spark_n)
     con.close()
-
-
-# --- streaming probe rides the DECISION leg (round-11 item 5 pin) ----
-
-
-def test_stream_near_leg_is_decision_only(spark, sf_dir, tmp_path, monkeypatch):
-    """The STREAM's per-micro-batch probe must ride the decision-only
-    path: probe_batch called with count_candidates falsey, LeftSemi in
-    the executed decision plan, and no counting-era candidate
-    aggregation (n_near_candidates) anywhere in it. §21.4 proved the
-    BATCH probe's bytes linear; this pins that the streaming wrapper
-    cannot silently regress onto the counting leg whose bytes grow
-    with corpus collision density (4.72x per 3x at sf30)."""
-    import glob
-    import os
-    import shutil
-
-    import welearn_datastack_spark.pipeline.ingest_increment as inc
-    from welearn_datastack_spark.sources.tables import load_table
-    from welearn_datastack_spark.streaming.state_machine import stream_ingest_probe
-
-    captured: dict = {}
-    real = inc.probe_batch
-
-    def spy(spark_, batch, state_dir, count_candidates=False, **precomputed):
-        d = real(
-            spark_, batch, state_dir,
-            count_candidates=count_candidates, **precomputed,
-        )
-        captured["count_candidates"] = count_candidates
-        captured["plan"] = d._jdf.queryExecution().executedPlan().toString()
-        return d
-
-    monkeypatch.setattr(inc, "probe_batch", spy)
-
-    docs = load_table(spark, sf_dir, "documents")
-    m = F.col("doc_id") % 5
-    work = str(tmp_path)
-    inc.build_state(docs.filter(m.isin(1, 2, 3)), f"{work}/state")
-    src = f"{work}/incoming"
-    docs.filter(m == 4).coalesce(1).write.mode("overwrite").parquet(f"{work}/tmp_a")
-    os.makedirs(src, exist_ok=True)
-    shutil.copy(glob.glob(f"{work}/tmp_a/part-*.parquet")[0], f"{src}/a.parquet")
-
-    stream_ingest_probe(spark, src, f"{work}/state", f"{work}/ckpt", f"{work}/out")
-
-    assert captured, "stream never reached probe_batch"
-    assert not captured["count_candidates"]
-    assert "LeftSemi" in captured["plan"], captured["plan"][:1500]
-    assert "n_near_candidates" not in captured["plan"]

@@ -150,17 +150,23 @@ def _curate(args: argparse.Namespace) -> None:
 def _ingest_increment(args: argparse.Namespace) -> None:
     """Incremental-ingest job: mod-split the documents table into the
     stored corpus and an incoming batch, build the persisted dedup
-    state on first run, probe the batch against the STATE (exact-hash
-    + LSH band probes — the corpus is never re-shingled), write the
-    per-document decisions, and append the admitted documents' state.
-    Run it twice against the same --state to see the idempotent shape:
-    the second run's batch is all exact_dup.
+    state on first run, then run one ingest cycle
+    (``pipeline.ingest_increment.ingest_batch``): probe the batch
+    against the STATE (exact-hash + LSH band probes — the corpus is
+    never re-shingled), write the per-document decisions to --out, and
+    append the admitted documents' hashes and bands to --state. Run it
+    twice against the same --state to see the idempotent shape: the
+    second run admits nothing.
 
     The LSH knobs (--shingle-n/--n-hashes/--rows-per-band) apply to a
     FIRST build only; an existing store's persisted lsh_params.json
     always wins, so probes can never mismatch the stored bands. See
     pipeline.ingest_increment.LshParams for the candidate s-curve the
-    knobs trace (defaults: 4 bands x 2 rows -> s50 = 0.5 Jaccard)."""
+    knobs trace (defaults: 4 bands x 2 rows -> s50 = 0.5 Jaccard).
+
+    It ends with a one-line JSON stage report: the decisions per state
+    and the documents admitted, counted by the Observations on the
+    decision write and the hash append."""
     from .pipeline.ingest_increment import (
         LshParams,
         ingest_increment,
@@ -170,31 +176,34 @@ def _ingest_increment(args: argparse.Namespace) -> None:
     from .session import get_spark
     from .sources.tables import load_table
 
+    try:
+        if args.target_s50 is not None:
+            # recall-driven sizing: derive the banding from the threshold
+            # (validated by the lsh_dedup_recall harness family)
+            params = size_lsh_params(args.target_s50, shingle_n=args.shingle_n)
+            print(
+                f"sized for s50~{args.target_s50}: {params} "
+                f"(realized s50={params.s50:.3f}, {params.n_bands} bands)"
+            )
+        else:
+            params = LshParams(
+                shingle_n=args.shingle_n,
+                n_hashes=args.n_hashes,
+                rows_per_band=args.rows_per_band,
+            )
+    except ValueError as e:
+        sys.exit(f"ingest-increment: {e}")
     spark = get_spark("welearn-ingest-increment")
     docs = load_table(spark, args.sf_dir, "documents")
-    if args.target_s50 is not None:
-        # recall-driven sizing: derive the banding from the threshold
-        # (validated by the lsh_dedup_recall harness family)
-        params = size_lsh_params(args.target_s50, shingle_n=args.shingle_n)
-        print(
-            f"sized for s50~{args.target_s50}: {params} "
-            f"(realized s50={params.s50:.3f}, {params.n_bands} bands)"
-        )
-    else:
-        params = LshParams(
-            shingle_n=args.shingle_n,
-            n_hashes=args.n_hashes,
-            rows_per_band=args.rows_per_band,
-        )
-    decisions = ingest_increment(
+    _, decided, admitted = ingest_increment(
         spark, docs, args.state, out_dir=args.out, batch_mod=args.batch_mod,
         params=params,
     )
     eff = load_params(args.state)
     print(f"lsh params in effect: {eff} (s50={eff.s50:.3f})")
-    counts = {r["state"]: r["n"] for r in
-              decisions.groupBy("state").agg(F.count(F.lit(1)).alias("n")).collect()}
-    print(f"ingest-increment complete: {counts} -> {args.out}")
+    print(f"ingest-increment complete: {decided} -> {args.out}")
+    report = {"job": "ingest-increment", "out": args.out, "decisions": decided, "admitted": admitted}
+    print(json.dumps(report))
 
 
 def _compact(args: argparse.Namespace) -> None:
@@ -265,7 +274,7 @@ def main(argv: list[str] | None = None) -> None:
     ii.add_argument("--sf-dir", required=True)
     ii.add_argument("--state", required=True, help="dedup state store directory")
     ii.add_argument("--out", required=True, help="per-document decisions parquet")
-    ii.add_argument("--batch-mod", type=int, default=5)
+    ii.add_argument("--batch-mod", type=_at_least_one, default=5)
     ii.add_argument("--shingle-n", type=int, default=3,
                     help="word-shingle width (first build only)")
     ii.add_argument("--n-hashes", type=int, default=8,

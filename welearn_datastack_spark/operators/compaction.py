@@ -102,7 +102,10 @@ def compact(
     data under ``.__old_*`` — ``recover_interrupted_compaction``
     restores it on the next startup. Object stores/HDFS need a
     metastore- or table-format-level swap (Delta/Iceberg commit)
-    instead of renames."""
+    instead of renames, so this swap stays local-FS on purpose even
+    though the ingest state store it compacts (``compact_state``) is
+    otherwise read and written through the Hadoop FileSystem of its
+    path's scheme."""
     stats = plan_compaction(spark, path, target_file_bytes)
     df = spark.read.parquet(path)
     out = df.repartition(stats["target_files"])

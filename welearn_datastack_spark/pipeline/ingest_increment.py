@@ -1,26 +1,31 @@
-"""Incremental-ingest pipeline — the composed end-to-end job that
-chains the pieces the batch `curate` job cannot use at ingest time:
+"""Incremental-ingest pipeline: the reference's append-only state
+machine (URL-ingest dedup + anti-join backfill, pipeline/url_ingest.py
+twin) generalized to content-level dedup state.
 
-  ingest batch → persisted-state read (content-hash store + LSH band
-  store) → exact-dup probe + band probe → per-document dedup decision
-  → state transitions (NEW documents' hashes/bands appended).
+One cycle, :func:`ingest_batch`, is the only way a batch enters the
+state store: the batch is probed against the persisted state (a
+content-hash store and an LSH band store), each document gets a
+decision (exact_dup / near_dup / new), the decisions are written, and
+the new documents' hashes and bands are appended so the next probe
+sees them. ``jobs ingest-increment`` (:func:`ingest_increment`), the
+streaming drop-folder ingest (``streaming/state_machine.
+stream_ingest_probe``) and the registered maintenance gate all admit
+through it.
 
-This is the production shape for continuous corpus growth: per-ingest
-cost scales with |batch| (the batch is shingled/hashed in-engine; the
-corpus side is a PLAIN PARQUET SCAN of pre-computed state, never
-re-shingled), and the state store is append-only — the same
-snapshot+tail discipline as operators/compaction.py. The reference's
-equivalent is the URL-ingest dedup + anti-join backfill chain
-(nodes_workflow collect→filter cycle, pipeline/url_ingest.py twin);
-here it is generalized to content-level dedup state.
+Per-ingest cost scales with |batch|: the batch is shingled and hashed
+in-engine once per cycle, while the corpus side is a plain parquet
+scan of precomputed state, never re-shingled. The store is
+append-only — the same snapshot+tail discipline as
+operators/compaction.py — and :func:`compact_state` folds the
+fragments. Every store access (the parquet legs, the params sidecar,
+the first-run check) goes through the Hadoop FileSystem of the path's
+scheme, so a ``file://`` or object-store URI works like a local path;
+only compaction's in-place swap is local-disk only.
 
-At 100 TB: ``band_store`` is written bucketed by ``band_key`` so the
-per-batch probe join is a bucket-local equi-join with no corpus-side
-shuffle (tests/test_bucketed_layout.py proves the zero-Exchange plan
-for this layout); ``doc_hashes`` is bucketed by ``content_hash`` the
-same way. Batches append new state in the arriving partitioning —
-compaction folds them into the bucketed snapshot on the maintenance
-schedule (operators/compaction.py).
+The bucketed-table layout (:func:`build_state_bucketed`,
+:func:`fold_state_bucketed`, :func:`probe_batch_bucketed`) probes with
+zero corpus-side Exchange (tests/test_bucketed_layout.py); the ingest
+cycle itself reads and appends the path store.
 """
 
 from __future__ import annotations
@@ -67,6 +72,17 @@ class LshParams:
     shingle_n: int = 3
     n_hashes: int = 8
     rows_per_band: int = 2
+
+    def __post_init__(self) -> None:
+        # a remainder would silently build one more (short) band than
+        # n_bands reports: lsh_band_keys bands seed s as s // rows
+        if min(self.shingle_n, self.n_hashes, self.rows_per_band) < 1:
+            raise ValueError(f"LSH params must all be >= 1, got {self}")
+        if self.n_hashes % self.rows_per_band:
+            raise ValueError(
+                f"n_hashes ({self.n_hashes}) must be a multiple of "
+                f"rows_per_band ({self.rows_per_band})"
+            )
 
     @property
     def n_bands(self) -> int:
@@ -132,6 +148,14 @@ def size_lsh_params(
     return best[1]
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop FileSystem of
+    its scheme, so a local path, a ``file://`` URI and an object-store
+    URI are read, written and deleted alike."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _params_path(state_dir: str) -> str:
     return f"{state_dir}/lsh_params.json"
 
@@ -140,11 +164,16 @@ def load_params(state_dir: str) -> LshParams:
     """The state store's own parameterization; defaults for stores
     written before the params file existed (they were all built at
     the defaults)."""
-    try:
-        with open(_params_path(state_dir)) as f:
-            return LshParams(**json.load(f))
-    except FileNotFoundError:
+    spark = SparkSession.active()
+    fs, path = _hadoop_path(spark, _params_path(state_dir))
+    if not fs.exists(path):
         return _DEFAULT_PARAMS
+    stream = fs.open(path)
+    try:
+        raw = spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)
+    finally:
+        stream.close()
+    return LshParams(**json.loads(bytes(raw)))
 
 
 def content_hashes(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -175,7 +204,7 @@ def build_state(
     """Materialize the persisted dedup state for a stored corpus:
     ``state_dir/doc_hashes`` and ``state_dir/band_store`` parquet,
     plus ``lsh_params.json`` recording the parameterization so every
-    later probe/transition rebuilds bands identically."""
+    later probe and admission rebuilds bands identically."""
     _run_concurrently(
         lambda: content_hashes(docs)
         .write.mode("overwrite")
@@ -184,8 +213,12 @@ def build_state(
         .write.mode("overwrite")
         .parquet(f"{state_dir}/band_store"),
     )
-    with open(_params_path(state_dir), "w") as f:
-        json.dump(asdict(params), f)
+    fs, path = _hadoop_path(docs.sparkSession, _params_path(state_dir))
+    stream = fs.create(path, True)
+    try:
+        stream.write(json.dumps(asdict(params)).encode())
+    finally:
+        stream.close()
 
 
 _TBLPROP_KEY = "welearn.lsh_params"
@@ -214,41 +247,53 @@ def load_table_params(spark: SparkSession, table_prefix: str) -> LshParams | Non
     return None
 
 
+def _write_bucketed(
+    hashes: DataFrame,
+    bands: DataFrame,
+    table_prefix: str,
+    n_buckets: int,
+    params: LshParams,
+) -> None:
+    """Write the two state legs as bucketed tables —
+    ``{prefix}_doc_hashes`` by content_hash, ``{prefix}_band_store`` by
+    (band, band_key), each sorted by its key within buckets — and stamp
+    ``params`` on the band store."""
+    spark = hashes.sparkSession
+    for df, leg, keys in (
+        (hashes, "doc_hashes", ("content_hash",)),
+        (bands, "band_store", ("band", "band_key")),
+    ):
+        table = f"{table_prefix}_{leg}"
+        _drop_table_and_orphan(spark, table)
+        (
+            df.write.format("parquet")
+            .bucketBy(n_buckets, *keys)
+            .sortBy(*keys)
+            .mode("overwrite")
+            .saveAsTable(table)
+        )
+    _persist_table_params(spark, table_prefix, params)
+
+
 def build_state_bucketed(
     docs: DataFrame,
     table_prefix: str,
     n_buckets: int = 8,
     params: LshParams = _DEFAULT_PARAMS,
 ) -> None:
-    """The production layout for the state store: BUCKETED tables
-    (``{prefix}_doc_hashes`` by content_hash, ``{prefix}_band_store``
-    by (band, band_key)), so the per-batch probe joins satisfy their
-    ClusteredDistribution straight from the scan — the corpus side of
-    every probe join carries ZERO Exchange; only the (small) batch
-    side shuffles, into the bucket count. This is the demonstrated
-    form of the docstring's 100 TB claim — parity and the exchange
-    delta vs the path-based store are pinned in
-    tests/test_bucketed_layout.py."""
-    spark = docs.sparkSession
-    _drop_table_and_orphan(spark, f"{table_prefix}_doc_hashes")
-    (
-        content_hashes(docs)
-        .write.format("parquet")
-        .bucketBy(n_buckets, "content_hash")
-        .sortBy("content_hash")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_doc_hashes")
+    """The state store as BUCKETED tables (see :func:`_write_bucketed`),
+    so the per-batch probe joins satisfy their ClusteredDistribution
+    straight from the scan — the corpus side of every probe join
+    carries ZERO Exchange; only the (small) batch side shuffles, into
+    the bucket count. Parity and the exchange delta vs the path-based
+    store are pinned in tests/test_bucketed_layout.py."""
+    _write_bucketed(
+        content_hashes(docs),
+        band_keys(docs, params=params),
+        table_prefix,
+        n_buckets,
+        params,
     )
-    _drop_table_and_orphan(spark, f"{table_prefix}_band_store")
-    (
-        band_keys(docs, params=params)
-        .write.format("parquet")
-        .bucketBy(n_buckets, "band", "band_key")
-        .sortBy("band", "band_key")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_band_store")
-    )
-    _persist_table_params(spark, table_prefix, params)
 
 
 def probe_batch(
@@ -256,13 +301,12 @@ def probe_batch(
     batch: DataFrame,
     state_dir: str,
     count_candidates: bool = False,
-    batch_hashes: DataFrame | None = None,
-    batch_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Per-incoming-document dedup decision against the PERSISTED
     state — the batch is hashed/shingled in-engine, the corpus side is
     read from the state parquet (never recomputed), so probe cost is
-    O(|batch|) plus the bucket-local band join.
+    O(|batch|) plus the bucket-local band join. A probe only: to admit
+    the batch's new documents, run :func:`ingest_batch`.
 
     Default (decision-only) output (doc_id, exact_dup_of, near_dup,
     state):
@@ -278,31 +322,18 @@ def probe_batch(
     near leg for the candidate-pair stream and reports
     ``n_near_candidates`` (distinct stored partners per doc). Its
     bytes grow with corpus collision density (4.72× per 3× corpus
-    step measured at sf30), so it is not the hot-loop default —
-    ``apply_transitions`` consumes only the state column, which is
-    identical between the modes (gated by ingest_decision_probe vs
-    ingest_increment_pipeline).
-
-    ``batch_hashes`` / ``batch_bands`` (optional): the batch's
-    content-hash / band-key frames if the caller already computed
-    them — a probe-then-transition cycle needs the SAME frames for
-    the state append, and the minhash band pipeline is the expensive
-    per-batch leg, so computing it once (pinned with a
-    localCheckpoint) and passing it to both probe and
-    apply_transitions halves the per-batch shingle/minhash work
-    (r15 opt; guide §7.2 duplicated subtrees). Must be built from
-    ``batch`` with this store's params — pass frames from
-    :func:`content_hashes` / :func:`band_keys` only."""
-    stored_hashes = spark.read.parquet(f"{state_dir}/doc_hashes")
-    stored_bands = spark.read.parquet(f"{state_dir}/band_store")
+    step measured at sf30), so it is not the hot-loop default — the
+    ingest cycle admits on the state column only, which is identical
+    between the modes (gated by ingest_decision_probe vs
+    ingest_increment_pipeline)."""
+    params = load_params(state_dir)
     return _probe(
         batch,
-        stored_hashes,
-        stored_bands,
-        load_params(state_dir),
+        content_hashes(batch),
+        band_keys(batch, params=params),
+        spark.read.parquet(f"{state_dir}/doc_hashes"),
+        spark.read.parquet(f"{state_dir}/band_store"),
         count_candidates=count_candidates,
-        batch_hashes=batch_hashes,
-        batch_bands=batch_bands,
     )
 
 
@@ -333,26 +364,22 @@ def probe_batch_bucketed(
         )
     return _probe(
         batch,
+        content_hashes(batch),
+        band_keys(batch, params=stored or params or _DEFAULT_PARAMS),
         spark.table(f"{table_prefix}_doc_hashes"),
         spark.table(f"{table_prefix}_band_store"),
-        stored or params or _DEFAULT_PARAMS,
         count_candidates=count_candidates,
     )
 
 
 def _probe(
     batch: DataFrame,
+    batch_hashes: DataFrame,
+    batch_bands: DataFrame,
     stored_hashes: DataFrame,
     stored_bands: DataFrame,
-    params: LshParams = _DEFAULT_PARAMS,
     count_candidates: bool = False,
-    batch_hashes: DataFrame | None = None,
-    batch_bands: DataFrame | None = None,
 ) -> DataFrame:
-    if batch_hashes is None:
-        batch_hashes = content_hashes(batch)
-    if batch_bands is None:
-        batch_bands = band_keys(batch, params=params)
     exact = (
         batch_hashes
         .join(
@@ -396,111 +423,92 @@ def _probe(
     )
 
 
-def apply_transitions(
-    spark: SparkSession,
-    batch: DataFrame,
-    decisions: DataFrame,
-    state_dir: str,
-    batch_hashes: DataFrame | None = None,
-    batch_bands: DataFrame | None = None,
-) -> int:
-    """State transition: documents judged NEW join the corpus — their
-    content hashes and band keys are APPENDED to the state store, so
-    the next ingest's probe sees them (idempotency: re-probing the
-    same batch then flags every doc an exact dup of itself-in-state).
-    Returns the number of admitted documents.
+_STATES = ("exact_dup", "near_dup", "new")
 
-    ``batch_hashes`` / ``batch_bands`` (optional, r15 opt): the whole
-    batch's content-hash / band-key frames when the caller already
-    computed them for the probe (see :func:`probe_batch`). The appends
-    then semi-join those frames to the admitted ids instead of
-    re-running the shingle/minhash pipeline on the admitted rows — the
-    band pipeline is the expensive per-batch leg, and without reuse it
-    ran twice per ingest cycle. The caller must have PINNED the band
-    frame (localCheckpoint) if it wants the recompute saved rather
-    than merely deduplicated lineage; the hash frame is one md5 per
-    row and may stay lazy. Both frames read only batch-source files,
-    never the state files being appended to, so the self-read hazard
-    the admitted checkpoint guards against does not arise on this
-    path — PROVIDED ``decisions`` is already pinned. Every in-repo
-    caller passes a materialized decisions frame (localCheckpoint or a
-    read of the written decision files); an un-pinned decisions frame
-    would re-read the state store through the admitted-id semi-join
-    exactly while the appends grow it, so the precomputed path
-    requires the same pin the default path performs itself."""
-    new_ids = decisions.filter(F.col("state") == "new").select("doc_id")
-    if batch_hashes is not None and batch_bands is not None:
-        # the admitted count rides the (smaller) hash append as an
-        # Observation; the two appends still overlap (guide §2.6)
-        obs = Observation()
-        hashes_out = batch_hashes.join(new_ids, on="doc_id").observe(
-            obs, F.count(F.lit(1)).alias("c")
-        )
-        bands_out = batch_bands.join(new_ids, on="doc_id")
-        _run_concurrently(
-            lambda: hashes_out.write.mode("append").parquet(
-                f"{state_dir}/doc_hashes"
-            ),
-            lambda: bands_out.write.mode("append").parquet(
-                f"{state_dir}/band_store"
-            ),
-        )
-        return int(obs.get["c"])
-    admitted = batch.join(new_ids, on="doc_id")
-    # decisions derive from a lazy probe over the files being appended
-    # to — pin them before the writes (bounded: |batch| rows of ids);
-    # the admitted count rides the checkpoint job as an Observation so
-    # the return value costs no extra action
-    obs = Observation()
-    admitted = admitted.observe(obs, F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=True
+
+def ingest_batch(
+    spark: SparkSession, batch: DataFrame, state_dir: str, dec_dir: str
+) -> tuple[DataFrame, dict[str, int], int]:
+    """One ingest cycle — the only path by which documents join the
+    state store at ``state_dir``: probe ``batch`` against the store
+    (decision-only :func:`probe_batch` semantics), write the
+    per-document decisions to ``dec_dir`` (overwrite), then append the
+    hashes and bands of the documents decided 'new', so the next probe
+    sees them (re-probing the same batch flags each of them an exact
+    dup of itself). Returns the written decisions (read back), the
+    decision count per state, and the number of documents admitted.
+
+    Pin before append: the probe reads the very state files the
+    appends grow, so a recompute after an append would flip every
+    admitted document to an exact dup of itself. The decision write is
+    the one materialization — the appends select the admitted ids from
+    the WRITTEN decisions, never from the live probe plan. The batch's
+    band frame (the minhash pipeline, the expensive per-batch leg)
+    feeds both the probe and the band append, so it is pinned once
+    with ``localCheckpoint``; the hash frame is one md5 per row and
+    stays lazy. Both read only the batch, never the state.
+
+    The per-state counts ride the decision write and the admitted
+    count rides the hash append as Observations, so neither costs a
+    Spark job. A batch with no 'new' decision appends nothing: an
+    empty append would still add one 0-row file to each leg of the
+    store. A batch that decided 0 rows leaves schema-only files in
+    ``dec_dir``."""
+    bands = band_keys(batch, params=load_params(state_dir)).localCheckpoint(eager=True)
+    hashes = content_hashes(batch)
+    decisions = _probe(
+        batch,
+        hashes,
+        bands,
+        spark.read.parquet(f"{state_dir}/doc_hashes"),
+        spark.read.parquet(f"{state_dir}/band_store"),
     )
-    params = load_params(state_dir)
+    decided_obs = Observation()
+    decisions.observe(
+        decided_obs, *[F.count_if(F.col("state") == s).alias(s) for s in _STATES]
+    ).write.mode("overwrite").parquet(dec_dir)
+    decided = decided_obs.get
+    # explicit schema: the files carry the probe's own schema by
+    # construction, so the read skips the footer-sampling job
+    written = spark.read.schema(decisions.schema).parquet(dec_dir)
+    if not decided["new"]:
+        return written, decided, 0
+    new_ids = written.filter(F.col("state") == "new").select("doc_id")
+    admitted_obs = Observation()
+    hashes_out = hashes.join(new_ids, on="doc_id").observe(
+        admitted_obs, F.count(F.lit(1)).alias("n")
+    )
     _run_concurrently(
-        lambda: content_hashes(admitted)
-        .write.mode("append")
-        .parquet(f"{state_dir}/doc_hashes"),
-        lambda: band_keys(admitted, params=params)
+        lambda: hashes_out.write.mode("append").parquet(f"{state_dir}/doc_hashes"),
+        lambda: bands.join(new_ids, on="doc_id")
         .write.mode("append")
         .parquet(f"{state_dir}/band_store"),
     )
-    return int(obs.get["c"])
+    return written, decided, admitted_obs.get["n"]
 
 
 def ingest_increment(
     spark: SparkSession,
     docs: DataFrame,
     state_dir: str,
-    out_dir: str | None = None,
+    out_dir: str,
     batch_mod: int = 5,
     params: LshParams = _DEFAULT_PARAMS,
-) -> DataFrame:
-    """The composed job: mod-split ``docs`` into stored corpus and
-    incoming batch, build the state store on first run (missing
-    ``state_dir``), probe the batch, apply state transitions, and
-    (optionally) write the per-document decisions. Returns the
-    decisions DataFrame (lazy read of ``out_dir`` when written).
+) -> tuple[DataFrame, dict[str, int], int]:
+    """The composed job behind ``jobs ingest-increment``: mod-split
+    ``docs`` into stored corpus and incoming batch, build the state
+    store on first run (no ``state_dir/band_store``), then ingest the
+    batch with :func:`ingest_batch`, writing its decisions to
+    ``out_dir``. Returns :func:`ingest_batch`'s result.
 
     ``params`` applies only to a FIRST build; an existing store's
     persisted parameterization always wins (probing with different
     bands than the store holds would silently find nothing)."""
     batch_pred = F.col("doc_id") % batch_mod == 0
-    if not os.path.exists(f"{state_dir}/band_store"):
+    fs, band_store = _hadoop_path(spark, f"{state_dir}/band_store")
+    if not fs.exists(band_store):
         build_state(docs.filter(~batch_pred), state_dir, params=params)
-    decisions = probe_batch(spark, docs.filter(batch_pred), state_dir)
-    if out_dir is not None:
-        decisions.write.mode("overwrite").parquet(out_dir)
-        decisions = spark.read.parquet(out_dir)
-    else:
-        # the lazy decisions frame reads the very state files
-        # apply_transitions is about to append to — a relation refresh
-        # or recompute after the append would flip every admitted doc
-        # to exact_dup of itself. Pin the bounded (|batch|-row) result
-        # BEFORE the writes, the same convention as apply_transitions'
-        # own admitted pin and the streaming probe.
-        decisions = decisions.localCheckpoint(eager=True)
-    apply_transitions(spark, docs.filter(batch_pred), decisions, state_dir)
-    return decisions
+    return ingest_batch(spark, docs.filter(batch_pred), state_dir, out_dir)
 
 
 def compact_state(
@@ -517,7 +525,10 @@ def compact_state(
     stats stay selective after the fold. Content is preserved
     row-for-row, so probe decisions are IDENTICAL pre/post — gated by
     the ingest_state_maintenance query and
-    tests/test_e2e_pipeline.py. The params sidecar is untouched."""
+    tests/test_e2e_pipeline.py. The params sidecar is untouched. Unlike
+    the rest of the store, this verb needs a local ``state_dir``: the
+    in-place swap is a pair of ``os.rename`` calls
+    (operators/compaction.compact)."""
     from ..operators.compaction import compact
 
     hashes_stats, band_stats = _run_concurrently(
@@ -559,31 +570,17 @@ def fold_state_bucketed(
 ) -> None:
     """Fold the path-based state store into the bucketed-table layout
     WITHOUT recomputing — a pure shuffle-on-key rewrite of the
-    persisted hashes/bands (the corpus is never re-shingled). This is
-    the scale maintenance cycle: ingest appends fragments to the path
-    store; on the maintenance schedule the fragments fold into the
-    bucketed snapshot, and subsequent probes
-    (:func:`probe_batch_bucketed`) read the corpus side with ZERO
-    Exchange. Decisions are identical across the fold (same rows,
-    different layout). The path store's ``lsh_params.json`` sidecar
+    persisted hashes/bands (the corpus is never re-shingled). The
+    folded snapshot is what :func:`probe_batch_bucketed` reads with
+    ZERO corpus-side Exchange; :func:`ingest_batch` itself probes and
+    appends the path store only. Decisions are identical across the
+    fold (same rows, different layout). The path store's ``lsh_params.json`` sidecar
     travels with the fold (band-store TBLPROPERTY), so the folded
     tables stay self-describing."""
-    _drop_table_and_orphan(spark, f"{table_prefix}_doc_hashes")
-    (
-        spark.read.parquet(f"{state_dir}/doc_hashes")
-        .write.format("parquet")
-        .bucketBy(n_buckets, "content_hash")
-        .sortBy("content_hash")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_doc_hashes")
+    _write_bucketed(
+        spark.read.parquet(f"{state_dir}/doc_hashes"),
+        spark.read.parquet(f"{state_dir}/band_store"),
+        table_prefix,
+        n_buckets,
+        load_params(state_dir),
     )
-    _drop_table_and_orphan(spark, f"{table_prefix}_band_store")
-    (
-        spark.read.parquet(f"{state_dir}/band_store")
-        .write.format("parquet")
-        .bucketBy(n_buckets, "band", "band_key")
-        .sortBy("band", "band_key")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_band_store")
-    )
-    _persist_table_params(spark, table_prefix, load_params(state_dir))

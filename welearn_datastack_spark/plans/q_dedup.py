@@ -1582,9 +1582,8 @@ _TWO_PHASE_INGEST_ORACLE = (
     "is re-decided. The oracle replays both phases declaratively: "
     "dec_a against the corpus (m∈{1,2,3}), dec_b against corpus ∪ "
     "dec_a's state='new' rows. Per-trigger cost is O(|new files|) — "
-    "the corpus side is the persisted state store, bucketed at scale "
-    "(build_state_bucketed) so the probe joins carry zero corpus "
-    "exchange.",
+    "the corpus side is the persisted state store, and each micro-batch "
+    "is one ingest_batch cycle.",
 )
 def stream_ingest_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
@@ -1662,12 +1661,9 @@ def ingest_state_maintenance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
 
     from ..pipeline.ingest_increment import (
-        _run_concurrently,
-        apply_transitions,
-        band_keys,
         build_state,
         compact_state,
-        content_hashes,
+        ingest_batch,
         probe_batch,
     )
     from .q_extra import _gate_scratch
@@ -1676,25 +1672,9 @@ def ingest_state_maintenance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     m = F.col("doc_id") % 5
     state = f"{work}/state"
-    # phase A's band frame feeds both the probe and the transition
-    # append — pin it ONCE, and build it CONCURRENTLY with the state
-    # store (independent lineage/directories, guide §2.6), so the
-    # batch-side minhash hides under the corpus-side build entirely
-    # (r15 opt; default LSH params on both sides by construction)
-    batch_a = docs.filter(m == 4)
-    _, bands_a = _run_concurrently(
-        lambda: build_state(docs.filter(m.isin(1, 2, 3)), state),
-        lambda: band_keys(batch_a).localCheckpoint(eager=True),
-    )
-    hashes_a = content_hashes(batch_a)
-
+    build_state(docs.filter(m.isin(1, 2, 3)), state)
     # phase A: ingest the %5==4 batch — admissions APPEND fragments
-    dec_a = probe_batch(
-        spark, batch_a, state, batch_hashes=hashes_a, batch_bands=bands_a
-    ).localCheckpoint(eager=True)
-    apply_transitions(
-        spark, batch_a, dec_a, state, batch_hashes=hashes_a, batch_bands=bands_a
-    )
+    dec_a, _, _ = ingest_batch(spark, docs.filter(m == 4), state, f"{work}/dec_a")
 
     def n_files() -> int:
         return len(glob.glob(f"{state}/band_store/part-*.parquet"))

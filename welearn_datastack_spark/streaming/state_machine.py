@@ -328,49 +328,38 @@ def stream_ingest_probe(
     """Streaming incremental ingest — the R4 (exactly-once file
     tracking) + R5 (stream joins static state) composition of
     ``pipeline/ingest_increment``: document files ARRIVE in
-    ``docs_path``; each micro-batch is probed against the persisted
-    dedup state (content-hash + LSH band stores — batch-native joins
-    inside ``foreachBatch``), the per-document decisions land in
-    ``out_dir/batch_id=N``, and admitted NEW documents transition the
-    state so later micro-batches see them as duplicates. The
-    checkpoint makes ingestion restart-driven: invoking the stream
-    again after new files land processes ONLY the new files.
+    ``docs_path``; each micro-batch runs one ingest cycle
+    (``ingest_batch``): it is probed against the persisted dedup
+    state, its per-document decisions land in ``out_dir/batch_id=N``,
+    and its admitted NEW documents join the state so later
+    micro-batches see them as duplicates. The checkpoint makes
+    ingestion restart-driven: invoking the stream again after new
+    files land processes ONLY the new files.
 
     Delivery semantics, precisely: exactly-once applies to SOURCE
     FILE TRACKING (the checkpoint never feeds a consumed file to a
     second batch); the foreachBatch body itself is at-least-once, so
-    both side effects are built to converge under replay. The
+    both side effects of ``ingest_batch`` converge under replay. The
     decision write is idempotent per batch — a deterministic
     ``batch_id=N`` directory overwrite, so a crash between the write
     and the checkpoint commit re-writes the same directory instead of
-    appending duplicate rows. The state transition is self-healing:
-    a replayed batch whose admissions already committed re-probes as
-    exact_dup (of itself, now in state), so apply_transitions admits
-    nothing twice and the state store never double-appends. The one
-    replay-visible artifact is that such a batch's re-written
-    decisions record exact_dup-of-self instead of the original 'new'
-    — the admission is still attributable (exact_dup_of points at the
-    admitted row), and state remains exactly correct. Decisions are
-    written BEFORE the state transition, so in the no-failure path
-    each document's decision reflects the state at its own arrival.
-    An EMPTY batch (a landed file with no rows) writes its
-    ``batch_id=N`` directory and then deletes it, leaving neither
-    decisions nor state appends. A crash inside that window leaves a
-    data-free directory (schema-only files) in the log; the replayed
+    appending duplicate rows. The admission is self-healing: a
+    replayed batch whose appends already committed re-probes as
+    exact_dup (of itself, now in state), so nothing is admitted twice
+    and the state store never double-appends. The one replay-visible
+    artifact is that such a batch's re-written decisions record
+    exact_dup-of-self instead of the original 'new' — the admission is
+    still attributable (exact_dup_of points at the admitted row), and
+    state remains exactly correct. ``ingest_batch`` writes the
+    decisions BEFORE it appends, so in the no-failure path each
+    document's decision reflects the state at its own arrival. An
+    EMPTY batch (a landed file with no rows) appends nothing, and its
+    ``batch_id=N`` directory is deleted after the write through the
+    Hadoop FileSystem of its scheme. A crash inside that window leaves
+    a data-free directory (schema-only files) in the log; the replayed
     batch overwrites and deletes it again, and readers of the log see
-    no rows from it in any case.
-
-    At 100 TB the state store is the bucketed-table layout
-    (``pipeline/ingest_increment.build_state_bucketed``): the probe
-    joins inside every micro-batch read the corpus side shuffle-free,
-    so per-trigger cost is O(|new files|), never O(|corpus|)."""
-    from ..pipeline.ingest_increment import (
-        apply_transitions,
-        band_keys,
-        content_hashes,
-        load_params,
-        probe_batch,
-    )
+    no rows from it in any case."""
+    from ..pipeline.ingest_increment import _hadoop_path, ingest_batch
 
     _check_decision_log_layout(out_dir)
 
@@ -382,61 +371,11 @@ def stream_ingest_probe(
         schema = spark.read.parquet(docs_path).schema
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # pin the decisions before the writes: they derive from a lazy
-        # probe over the very state files apply_transitions appends to.
-        # |decisions| == |batch| by construction (one decision per
-        # incoming doc), so the emptiness test rides the decision write
-        # as an Observation instead of a separate isEmpty job per batch
-        # (r15 opt) — an empty batch's decision directory is written,
-        # then removed below, so the log gains nothing from it
-        from pyspark.sql import Observation
-
-        # the batch's band frame feeds BOTH the probe's near leg and
-        # the state-transition append — pin it once so the minhash
-        # pipeline (the expensive per-batch leg) runs once per batch
-        # instead of twice (r15 opt; |batch|·n_bands narrow rows at
-        # any scale). The hash frame is one md5 per row — lazy is fine.
-        bands = band_keys(batch_df, params=load_params(state_dir)).localCheckpoint(
-            eager=True
-        )
-        hashes = content_hashes(batch_df)
-        obs = Observation()
-        decisions = probe_batch(
-            spark, batch_df, state_dir, batch_hashes=hashes, batch_bands=bands
-        ).observe(obs, F.count(F.lit(1)).alias("c"))
-        # per-batch overwrite, not append: foreachBatch replays on
-        # crash-restart, and the deterministic directory makes the
-        # decision log idempotent under replay (see docstring). The
-        # WRITE is the decisions' one materialization (r16 opt: it
-        # replaced a localCheckpoint job the write then merely read
-        # back) — the probe still runs strictly before the state
-        # appends below, because apply_transitions consumes the
-        # WRITTEN decision files, not the live probe plan over the
-        # state files it appends to (same pin-before-write hazard,
-        # same fix, one job cheaper per batch). The Observation rides
-        # the write; an empty replay batch removes its (empty, data-
-        # free) directory again so the decision log still gains
-        # nothing.
         dec_dir = f"{out_dir}/batch_id={batch_id}"
-        decisions.write.mode("overwrite").parquet(dec_dir)
-        if obs.get["c"] == 0:
-            # through the Hadoop FileSystem of the directory's scheme,
-            # so the cleanup works on object storage as well as local
-            # disk (a recursive delete of a missing path is a no-op)
-            jvm = spark._jvm
-            path = jvm.org.apache.hadoop.fs.Path(dec_dir)
-            path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
-            return
-        apply_transitions(
-            spark,
-            batch_df,
-            # explicit schema: the written files carry decisions' own
-            # schema by construction — skip the footer-sampling pass
-            spark.read.schema(decisions.schema).parquet(dec_dir),
-            state_dir,
-            batch_hashes=hashes,
-            batch_bands=bands,
-        )
+        _, decided, _ = ingest_batch(spark, batch_df, state_dir, dec_dir)
+        if not any(decided.values()):
+            fs, path = _hadoop_path(spark, dec_dir)
+            fs.delete(path, True)
 
     q = (
         spark.readStream.schema(schema)
